@@ -1,7 +1,9 @@
 """Table I/O seam (SURVEY §7 sandbox substitution: Iceberg -> Parquet).
 
-All stage materialization goes through these two functions so the
-production swap to Iceberg is THIS file only:
+All stage materialization goes through ``write_table``/``read_table``
+so the production swap to Iceberg is THIS file only, and every pin of
+an intermediate in executor storage goes through ``pin``/``release``/
+``pin_scope`` (the policy is in ``pin``'s docstring):
 
 - parquet (default): plain directory tables, used everywhere in the
   sandbox (no Iceberg runtime jars present).
@@ -15,9 +17,13 @@ Set NEURONER_TABLE_FORMAT=iceberg (plus a catalog config) to switch.
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 def _table_format() -> str:
     # read per call (not at import) so tests and spark-submit wrappers
@@ -64,23 +70,77 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _ddl_field_names(schema) -> list[str]:
-    """Column names from a DDL string or StructType (top-level commas
-    only — a comma inside ``array<...>``/``map<...>``/``struct<...>``
-    does not split)."""
-    if not isinstance(schema, str):
-        return [f.name for f in schema.fields]
-    names, depth, start = [], 0, 0
-    for i, ch in enumerate(schema + ","):
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            field = schema[start:i].strip()
-            names.append(field.split()[0].strip("`"))
-            start = i + 1
-    return names
+# innermost-last stack of open pin_scope() lists
+_PIN_SCOPES: contextvars.ContextVar[tuple] = contextvars.ContextVar("pin_scopes", default=())
+
+
+def pin(df: DataFrame, how: str) -> DataFrame:
+    """Pin ``df`` in executor storage; the one place the engine does so.
+
+    Policy (every intermediate read more than once goes through here):
+
+    - ``how="persist"``: lazy — the first action fills the cache.  The
+      frame keeps its ``outputPartitioning``, so iterative joins
+      against a persisted, hash-repartitioned frame co-partition with
+      no exchange (PageRank's static graph and rank frames).
+    - ``how="local_checkpoint"``: eager — cuts the lineage, so a loop's
+      analysis cost stays bounded and branches read back the blocks
+      instead of re-running the upstream.  It reads back with UNKNOWN
+      partitioning; repartition after it when the consumers share a key.
+    - Every pin is released, either per round by ``release(df)`` once
+      the caller knows the frame is dead, or by the innermost
+      ``pin_scope()`` on exit.  Stage writers (the ``run_pipeline`` and
+      ``run_corpus_prep`` stage closures, the incremental stores, each
+      streaming micro-batch) open a scope around build + write: their
+      outputs are read back from storage, so nothing pinned inside is
+      live afterwards.  A pin made outside any scope stays until its
+      caller releases it — a direct operator call may return a lazy
+      frame that still reads it.
+    - Release goes through a precise handle: the persisted DataFrame
+      itself, or the checkpointed ``LogicalRDD``'s RDD (``df.rdd``
+      builds a fresh, never-persisted RDD — unpersisting it frees
+      nothing).  Both drop the entry from ``getPersistentRDDs()``.
+    """
+    if how == "persist":
+        out = df.persist()
+        free = lambda: out.unpersist(blocking=False)  # noqa: E731
+    elif how == "local_checkpoint":
+        out = df.localCheckpoint()
+        rdd = out._jdf.queryExecution().logical().rdd()
+        free = lambda: rdd.unpersist(False)  # noqa: E731
+    else:
+        raise ValueError(f"pin: how must be 'persist' or 'local_checkpoint', got {how!r}")
+    scopes = _PIN_SCOPES.get()
+    owner = scopes[-1] if scopes else None
+
+    def _release() -> None:
+        free()
+        if owner is not None and _release in owner:
+            owner.remove(_release)
+
+    if owner is not None:
+        owner.append(_release)
+    out._pin_release = _release
+    return out
+
+
+def release(df: DataFrame) -> None:
+    """Free one pin made by ``pin`` (idempotent)."""
+    df._pin_release()
+
+
+@contextlib.contextmanager
+def pin_scope():
+    """Release, on exit, every pin made inside the block (and not
+    already released).  Scopes nest; a pin belongs to the innermost."""
+    pins: list = []
+    token = _PIN_SCOPES.set(_PIN_SCOPES.get() + (pins,))
+    try:
+        yield
+    finally:
+        _PIN_SCOPES.reset(token)
+        for fn in reversed(pins[:]):
+            fn()
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
@@ -96,22 +156,36 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     builds never touch a Python worker, and the optimizer can fold or
     prune the relation.  Use for every driver-built frame on a query
     path (alias dictionaries, union-find results, probe key lists,
-    partition offsets).  Falls back to the classic path only if the
-    pandas conversion is rejected (exotic types).
+    partition offsets).  Falls back to the classic path, with a logged
+    warning, only if the pandas conversion is rejected (exotic types).
 
-    ``rows``: list of tuples (or an existing pandas DataFrame);
+    ``rows``: any iterable of tuples (read once) or a pandas DataFrame;
     ``schema``: DDL string or StructType — names are applied
     positionally, exactly like ``createDataFrame(rows, schema)``.
+    Integer columns holding nulls are built as pandas ``Int64`` so
+    64-bit ids survive exactly (a plain int column with a None turns
+    into float64, which rounds ids above 2^53).
     """
     import pandas as pd
 
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
     if isinstance(rows, pd.DataFrame):
         pdf = rows
     else:
-        pdf = pd.DataFrame(list(rows), columns=_ddl_field_names(schema))
+        rows = list(rows)
+        pdf = pd.DataFrame(rows, columns=schema.fieldNames())
+        for i, field in enumerate(schema.fields):
+            if isinstance(field.dataType, T.IntegralType) and pdf.iloc[:, i].isna().any():
+                pdf.isetitem(i, pd.array([r[i] for r in rows], dtype="Int64"))
     try:
         return spark.createDataFrame(pdf, schema)
-    except Exception:
+    except Exception as e:
         # exotic value types pandas/Arrow refuse — keep the classic
         # row-pickling path as the correctness fallback
-        return spark.createDataFrame(list(rows) if not isinstance(rows, pd.DataFrame) else rows.itertuples(index=False), schema)
+        logging.getLogger(__name__).warning(
+            "local_df: Arrow conversion rejected (%s); falling back to pickled rows", e
+        )
+        return spark.createDataFrame(
+            rows.itertuples(index=False) if isinstance(rows, pd.DataFrame) else rows, schema
+        )

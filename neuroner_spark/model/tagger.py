@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from neuroner_spark.io import pin
 from neuroner_spark.model.bilstm_crf import (
     argmax_decode,
     char_encode,
@@ -243,7 +244,7 @@ def tag_tokens(
     if validate:
         from neuroner_spark.functions.tags import bioes_violations
 
-        tagged = tagged.localCheckpoint()  # one tagger pass feeds gate + consumers
+        tagged = pin(tagged, "local_checkpoint")  # one tagger pass feeds gate + consumers
         n_bad = bioes_violations(tagged, label_col="label").count()
         if n_bad > 0:
             raise ValueError(f"tagger emitted {n_bad} ill-formed BIOES labels")

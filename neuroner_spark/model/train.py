@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from neuroner_spark.io import pin, release
 from neuroner_spark.model.bilstm_crf import (
     backward_features,
     char_encode_backward,
@@ -490,7 +491,7 @@ def train_full_network(
     the best-F1 ones.
     """
     label_to_idx = {l: i for i, l in enumerate(LABELS)}
-    sentences = _labeled_sentences(tokens).cache()
+    sentences = pin(_labeled_sentences(tokens), "persist")
     sentences.count()
     names = _full_param_names(train_embeddings, loss, train_chars)
     history = []
@@ -604,7 +605,7 @@ def train_full_network(
             stall += 1
             if stall >= patience:
                 break
-    sentences.unpersist()
+    release(sentences)
     out_bundle = best_bundle if (eval_tokens is not None and best_bundle is not None) else cur
     return {
         "bundle": out_bundle,
@@ -709,7 +710,7 @@ def train_crf_transitions(
     (unary head fixed). Returns {'bundle', 'history': [...]}.
     """
     label_to_idx = {l: i for i, l in enumerate(LABELS)}
-    sentences = _labeled_sentences(tokens).cache()
+    sentences = pin(_labeled_sentences(tokens), "persist")
     n_sent = sentences.count()
     S = N_CLASSES + 2
     cur = dict(bundle, arrays={k: v.copy() for k, v in bundle["arrays"].items()})
@@ -739,7 +740,7 @@ def train_crf_transitions(
         history.append({"epoch": epoch, "token_errors": n_err, "n_tokens": n_tok})
         if n_err == 0:
             break
-    sentences.unpersist()
+    release(sentences)
     return {"bundle": cur, "history": history}
 
 
@@ -809,7 +810,7 @@ def train_output_layer(
     trained bundle. Returns {'bundle', 'history': [{epoch, loss, acc}]}.
     """
     label_to_idx = {l: i for i, l in enumerate(LABELS)}
-    sentences = _labeled_sentences(tokens).cache()
+    sentences = pin(_labeled_sentences(tokens), "persist")
     sentences.count()
     C = N_CLASSES
     W_rows = bundle["arrays"]["out_W"].shape[0]
@@ -855,5 +856,5 @@ def train_output_layer(
             stall += 1
             if stall >= patience:
                 break
-    sentences.unpersist()
+    release(sentences)
     return {"bundle": cur, "history": history, "best_epoch": best_epoch}

@@ -11,8 +11,9 @@ naive min-label flooding on long chains.
 Scale notes:
 - each round is two self-joins + a groupBy on node id — all equi-joins
   Catalyst can plan as shuffle-hash; AQE coalesces as components shrink
-- ``localCheckpoint()`` every round truncates lineage so the plan does
-  not grow unboundedly (mandatory for iterative DataFrame loops)
+- every round's frame is pinned with ``io.pin(.., "local_checkpoint")``
+  so the plan does not grow unboundedly (mandatory for iterative
+  DataFrame loops), and the previous round's pin is released
 - convergence check is a count of changed edges (one action per round)
 """
 
@@ -20,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from neuroner_spark.io import local_df, pin, release
 
 MAX_ITER = 50
 
@@ -87,10 +90,9 @@ def connected_components(
     """
     import time
 
-    base = (
-        edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-        .distinct()
-        .localCheckpoint()
+    base = pin(
+        edges.select(F.col("src").cast("long"), F.col("dst").cast("long")).distinct(),
+        "local_checkpoint",
     )
     if small_threshold:
         t0 = time.time()
@@ -124,8 +126,7 @@ def connected_components(
                 )
             from pyspark.sql import types as T
 
-            from neuroner_spark.io import local_df
-
+            release(base)  # the answer is driver-built; base is dead
             schema = T.StructType(
                 [
                     T.StructField("node", T.LongType(), False),
@@ -151,34 +152,14 @@ def connected_components(
         ).collect()[0]
         return row["n"], row["h"]
 
-    # per-round checkpoint RELEASE (same discipline as pagerank, r6
-    # session 5): each star round's localCheckpoint pins an edge-sized
-    # frame with no releasable DataFrame handle — a worst-case chain
-    # (40 rounds on the fixture topology) would pin 40 of them.  The
-    # round's registered RDD ids are diffed off the JVM map and the
-    # PREVIOUS round's freed once the new frame is materialized;
-    # ``base`` stays pinned (the singleton join after the loop reads it).
-    jsc = edges.sparkSession.sparkContext._jsc
-
-    def _pinned_ids() -> set:
-        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
-
-    def _release_ids(ids: set) -> None:
-        live = jsc.getPersistentRDDs()
-        for rid in ids:
-            if live.containsKey(rid):
-                live.get(rid).unpersist(False)
-
+    # ``base`` stays pinned (the singleton join after the loop reads it)
     prev_sig = _sig(cur)
-    prev_round_ids: set = set()
     for _i in range(max_iter):
         t0 = time.time()
-        ls = _large_star(cur)
-        before_ids = _pinned_ids()
-        ss = _small_star(ls).localCheckpoint()
+        ss = pin(_small_star(_large_star(cur)), "local_checkpoint")
         sig = _sig(ss)
-        _release_ids(prev_round_ids)
-        prev_round_ids = _pinned_ids() - before_ids
+        if _i:  # round 0 reads the unpinned filter over base
+            release(cur)
         if iteration_log is not None:
             iteration_log.append(
                 {"iter": _i, "edges": int(sig[0]), "wall_sec": round(time.time() - t0, 3)}

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from neuroner_spark.functions.text_analysis import fingerprint, hash28, hash64, ws_tokens
+from neuroner_spark.io import pin
 
 # Prime 2^31-1 for the universal-hash family (a*x+b) mod p over 28-bit
 # inputs: a < 2^31, x < 2^28 keeps a*x < 2^59 — no int64 overflow under
@@ -146,7 +147,7 @@ def ngram_jaccard_pairs(
     # back without the columnar-cache encode/decode and without the
     # first-consumer materialization race — measured 1.62 -> 1.25 s at
     # sf0.1.  Same pinned-storage footprint as the cache it replaces.
-    sh = shingles(docs, n, id_col, text_col, fast_hash).localCheckpoint()
+    sh = pin(shingles(docs, n, id_col, text_col, fast_hash), "local_checkpoint")
     df_counts = sh.groupBy("shingle_hash").agg(F.count("*").alias("df"))
     sh_f = sh.join(df_counts.filter(F.col("df") <= max_df), "shingle_hash", "left_semi")
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
@@ -316,7 +317,7 @@ def near_dedup_corpus(
     records it as the ``giant_buckets`` lineage stage, where the
     count is the manifest's ``n_rows``, no extra job) should pass
     ``warn_giants=False``."""
-    banded = minhash_banded(docs, n, bands, id_col, text_col, fast_hash).localCheckpoint()
+    banded = pin(minhash_banded(docs, n, bands, id_col, text_col, fast_hash), "local_checkpoint")
     # no-silent-caps (r3 ADVICE): the banded frame is already
     # materialized, so counting the over-cap buckets costs one tiny agg
     # job — a capped run announces itself without querying side outputs
@@ -424,7 +425,7 @@ def incremental_near_dedup(
     banded_new = (
         new_banded
         if new_banded is not None
-        else minhash_banded(new_docs, n, bands, id_col, text_col, fast_hash).localCheckpoint()
+        else pin(minhash_banded(new_docs, n, bands, id_col, text_col, fast_hash), "local_checkpoint")
     )
     band_index = corpus_banded.groupBy("band_id", "band_hash").agg(
         F.min("doc_id").alias("first_doc")
@@ -723,7 +724,7 @@ def simhash_near_dedup(
     sig = (
         signatures
         if signatures is not None
-        else simhash(docs, bits, id_col, text_col, fast_hash).localCheckpoint()
+        else pin(simhash(docs, bits, id_col, text_col, fast_hash), "local_checkpoint")
     )
     piles = sig.groupBy("simhash").agg(F.min("doc_id").alias("rep_id"))
     pile_edges = (

@@ -2,8 +2,8 @@
 iterative DataFrame joins (Page et al. 1999; the standard MapReduce
 formulation), the analytics consumer of the triple store's entity/edge
 tables — same execution discipline as ``operators/components.py``
-(localCheckpoint per round so the plan never grows, one action per
-round for the convergence check).
+(each round pinned through ``io.pin``, lineage cut every few rounds,
+one driver action per round).
 
 Scale shape at 10^9-node graphs:
   - the edge table is the only corpus-sized frame; each iteration is
@@ -11,16 +11,18 @@ Scale shape at 10^9-node graphs:
     — both shuffles keyed on node id, and the join side reuses the
     same partitioning every round (AQE + exchange reuse);
   - out-degrees are computed once, up front;
-  - dangling mass (nodes with no out-edges) is ONE scalar agg per
-    round, redistributed uniformly — without it rank leaks and the
-    result diverges from the true eigenvector;
-  - convergence check = L1 delta, one action per round.
+  - dangling mass (nodes with no out-edges) is one scalar per round,
+    redistributed uniformly — without it rank leaks and the result
+    diverges from the true eigenvector;
+  - convergence check = L1 delta, in the same action.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from neuroner_spark.io import pin, release
 
 
 def pagerank(
@@ -39,22 +41,22 @@ def pagerank(
     ``iteration_log``: appends {'iter', 'l1_delta', 'wall_sec'} per
     round (the components.py observability contract).
 
-    Partition-reuse structure (r6 session 5 — measured at 4M nodes /
-    40M edges, where the first formulation spent most of each round
-    re-exchanging the EDGE table): the static frames are persist()ed
-    behind explicit hash repartitions (edges by src, nodes/ranks by
-    node) instead of localCheckpoint()ed — a checkpointed frame
-    surfaces as a LogicalRDD with UNKNOWN partitioning, so every
-    round's share×edges join re-shuffled all 40M edge rows; a
-    persisted frame keeps its outputPartitioning and the joins
-    co-partition with ZERO edge exchange per round.  The rank frame is
-    likewise persisted per round (previous round released via its
-    handle — no JVM-map digging needed for persist), and every
-    ``checkpoint_interval`` rounds it is localCheckpoint()ed instead,
-    truncating the logical lineage so analysis cost stays bounded at
-    ANY iteration count (the one reshuffle those rounds pay is
-    node-sized, not edge-sized).  Live storage is bounded at ~2 rank
-    frames + the static graph regardless of max_iter."""
+    Partition-reuse structure: the static frames are pinned with
+    ``persist`` behind explicit hash repartitions (edges by src,
+    nodes/ranks by node), so every round's joins co-partition with no
+    edge exchange (measured at 4M nodes / 40M edges: a checkpointed
+    edge frame re-shuffled all 40M edge rows per round).  Each round's
+    rank frame is persisted too, and every ``checkpoint_interval``
+    rounds pinned with ``local_checkpoint`` instead, bounding analysis
+    cost at any iteration count; the previous round is released, so
+    live storage is ~2 rank frames + the static graph.
+
+    Dangling mass (nodes with no out-edges, a static flag on the node
+    frame) is read off the round's one materializing action — the agg
+    that fills the persisted frame, or the L1-delta agg when ``tol > 0``
+    — and enters the next round as a literal, so a round's plan reads
+    the previous rank frame once: the plan grows linearly between
+    checkpoints, not exponentially."""
     import time
 
     spark = edges.sparkSession
@@ -62,101 +64,67 @@ def pagerank(
     e = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
     if undirected:
         e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    e = (
-        e.filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition(shuffle_p, "src")
-        .persist()
+    e = pin(
+        e.filter(F.col("src") != F.col("dst")).distinct().repartition(shuffle_p, "src"),
+        "persist",
     )
+    # partitioned by src already (derived from e) — no exchange
+    out_deg = pin(e.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("deg")), "persist")
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
         .repartition(shuffle_p, "node")
-        .persist()
+    )
+    nodes = pin(
+        nodes.join(out_deg, "node", "left").select("node", F.col("deg").isNull().alias("dangling")),
+        "persist",
     )
     n = nodes.count()
     if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-    # partitioned by src already (derived from e) — no exchange
-    out_deg = e.groupBy("src").agg(F.count("*").alias("deg")).persist()
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).persist()
-    ranks.count()
+        for df in (e, out_deg, nodes):
+            release(df)
+        return nodes.select("node", F.lit(0.0).alias("rank"))
 
-    # localCheckpoint rounds pin blocks with NO releasable DataFrame
-    # handle (the r5 streaming-leak class; 25 un-released rounds at 5M
-    # nodes OOMed an 8 GB heap) — those rounds' RDD ids are diffed off
-    # the JVM persistent-RDD map and freed one round later
-    jsc = spark.sparkContext._jsc
-
-    def _pinned_ids() -> set:
-        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
-
-    def _release_ids(ids: set) -> None:
-        live = jsc.getPersistentRDDs()
-        for rid in ids:
-            if live.containsKey(rid):
-                live.get(rid).unpersist(False)
-
-    # seed with the INITIAL rank frame so round 0's release frees it
-    prev_frame = ranks  # previous round's persisted frame (handle release)
-    prev_ck_ids: set = set()  # previous checkpoint round's JVM rdd ids
+    # dangling mass of a rank frame, aggregated over its join with the
+    # node frame (co-partitioned on node — no exchange in persist rounds)
+    mass = F.coalesce(F.sum(F.when(F.col("dangling"), F.col("rank"))), F.lit(0.0))
+    ranks = pin(nodes.select("node", F.lit(1.0 / n).alias("rank")), "persist")
+    dang = ranks.join(nodes, "node").agg(mass).collect()[0][0]
     for i in range(max_iter):
         t0 = time.time()
-        with_deg = ranks.join(out_deg, ranks.node == out_deg.src, "left")
-        # dangling nodes (no out-edges) donate their mass uniformly —
-        # folded in as a LAZY broadcast scalar (a collect here would be
-        # an extra driver action per round)
-        dang_frame = (
-            with_deg.filter(F.col("deg").isNull())
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang"))
-        )
         contribs = (
-            with_deg.filter(F.col("deg").isNotNull())
+            ranks.join(out_deg, "node")
             .select("node", (F.col("rank") / F.col("deg")).alias("share"))
             .join(e, F.col("node") == e.src)
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("share").alias("inflow"))
         )
-        before_ids = _pinned_ids()
-        new_ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dang_frame))
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.col("_dang") / n
-                    + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
-                ).alias("rank"),
-            )
+        new_ranks = nodes.join(contribs, "node", "left").select(
+            "node",
+            (
+                F.lit((1.0 - damping) / n)
+                + F.lit(damping * dang / n)
+                + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
+            ).alias("rank"),
         )
         truncate = checkpoint_interval > 0 and (i + 1) % checkpoint_interval == 0
-        if truncate:
-            new_ranks = new_ranks.localCheckpoint()  # eager; lineage cut
-        else:
-            new_ranks = new_ranks.persist()
-            new_ranks.count()  # materialize so the old round can be freed
-        # the L1-delta convergence check is the round's ONLY extra
-        # driver action; fixed-iteration callers (tol<=0) skip it
+        new_ranks = pin(new_ranks, "local_checkpoint" if truncate else "persist")
+        # the round's ONE driver action fills the persisted frame and
+        # reads the next round's dangling mass — plus the L1 delta for
+        # the convergence check unless fixed-iteration (tol<=0)
+        scored = new_ranks.join(nodes, "node")
         delta = None
         if tol > 0:
-            delta = (
-                ranks.withColumnRenamed("rank", "r0")
-                .join(new_ranks, "node")
-                .agg(F.sum(F.abs(F.col("rank") - F.col("r0"))))
-                .collect()[0][0]
+            delta, dang = (
+                scored.join(ranks.select("node", F.col("rank").alias("r0")), "node")
+                .agg(F.sum(F.abs(F.col("rank") - F.col("r0"))), mass)
+                .collect()[0]
             )
-        # the old round fed this round's join (and the delta) — dead now
-        if prev_frame is not None:
-            prev_frame.unpersist(False)
-        _release_ids(prev_ck_ids)
-        if truncate:
-            prev_ck_ids = _pinned_ids() - before_ids
-            prev_frame = None
         else:
-            prev_ck_ids = set()
-            prev_frame = new_ranks
+            dang = scored.agg(mass).collect()[0][0]
+        # the old round fed this round's join (and the delta) — dead now
+        release(ranks)
         ranks = new_ranks
         if iteration_log is not None:
             entry = {"iter": i, "wall_sec": round(time.time() - t0, 3)}
@@ -165,14 +133,10 @@ def pagerank(
             iteration_log.append(entry)
         if delta is not None and delta < tol:
             break
-    # release the static graph frames (r7): the returned rank frame is
-    # already materialized (persisted+counted or checkpointed), so the
-    # edge/node/degree caches pinned for the loop are dead weight after
-    # return — without this every pagerank() call leaked three
-    # persisted frames for the session's lifetime.
-    e.unpersist(False)
-    nodes.unpersist(False)
-    out_deg.unpersist(False)
+    # the returned rank frame is materialized, so the static graph
+    # frames pinned for the loop are dead weight after return
+    for df in (e, out_deg, nodes):
+        release(df)
     return ranks
 
 
@@ -245,7 +209,7 @@ def host_pagerank(pages: DataFrame, **kw) -> DataFrame:
     is xxhash64(host) (collision-negligible at crawl scale); returns
     (host, rank) by joining the ranks back to the distinct host table
     (one broadcast-sized join at host cardinality)."""
-    hg = host_graph(link_edges(pages)).localCheckpoint()
+    hg = pin(host_graph(link_edges(pages)), "local_checkpoint")
     ids = (
         hg.select(F.col("src").alias("host"))
         .unionByName(hg.select(F.col("dst").alias("host")))
@@ -280,9 +244,10 @@ def top_entities_per_component(
     from neuroner_spark.plans.kg_pipeline import SYMMETRIC_PREDS, read_kg_triples
 
     triples = read_kg_triples(spark, store_dir).filter(F.col("pred") == pred)
-    edges = triples.select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    ).localCheckpoint()
+    edges = pin(
+        triples.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+        "local_checkpoint",
+    )
     ranks = pagerank(edges, undirected=pred in SYMMETRIC_PREDS, **pagerank_kw)
     comp = connected_components(edges)
     w = Window.partitionBy("component").orderBy(F.desc("rank"), F.asc("node"))

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from neuroner_spark.io import local_df, pin
+
 
 def assign_sequential_ids(
     df: DataFrame,
@@ -40,7 +42,7 @@ def assign_sequential_ids(
     )
     # materialize once so the sizes pass and the rank pass share the
     # shuffle output instead of recomputing the upstream plan twice
-    ranged = ranged.localCheckpoint()
+    ranged = pin(ranged, "local_checkpoint")
     sizes = {
         r["_pid"]: r["n"]
         for r in ranged.groupBy("_pid").agg(F.count("*").alias("n")).collect()
@@ -49,8 +51,6 @@ def assign_sequential_ids(
     for pid in range(P):
         offsets.append((pid, acc))
         acc += sizes.get(pid, 0)
-    from neuroner_spark.io import local_df
-
     off_df = local_df(spark, offsets, "_pid int, _off long")
     w = Window.partitionBy("_pid").orderBy(*order_cols)
     return (

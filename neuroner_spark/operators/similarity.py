@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from neuroner_spark.io import pin
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -308,7 +310,7 @@ def near_dedup_vectors(
     pairwise is the exact quadratic this path exists to avoid)."""
     from neuroner_spark.operators.components import connected_components
 
-    sigs = lsh_all_signatures(embeddings, n_planes, dim, n_tables).localCheckpoint()
+    sigs = pin(lsh_all_signatures(embeddings, n_planes, dim, n_tables), "local_checkpoint")
     emb = embeddings.select("vec_id", "embedding")
     cand = lsh_pairs_from_signatures(sigs, max_bucket)
     ea = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("emb_a"))

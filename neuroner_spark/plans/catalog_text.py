@@ -23,6 +23,7 @@ from neuroner_spark.functions.text_analysis import (
     quality_score,
     stopword_ratio,
 )
+from neuroner_spark.io import pin
 from neuroner_spark.operators.dedup import (
     exact_dedup,
     minhash_signatures,
@@ -392,7 +393,7 @@ def q_simhash(spark, sf_dir):
     from neuroner_spark.operators.dedup import simhash_near_dedup
 
     docs = _docs(spark, sf_dir)
-    sig = simhash(docs, bits=32).localCheckpoint()
+    sig = pin(simhash(docs, bits=32), "local_checkpoint")
     # all_docs from the materialized signatures (r7): the final inner
     # join on sig drops signature-less docs anyway, so re-scanning the
     # corpus (+ a distinct exchange) for the doc universe changed

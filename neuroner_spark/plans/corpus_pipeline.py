@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from neuroner_spark.functions.text_analysis import fingerprint, quality_score, repetition_metrics
+from neuroner_spark.io import local_df, pin, pin_scope
 from neuroner_spark.operators.dedup import (
     benchmark_contamination,
     giant_buckets_from_banded,
@@ -164,7 +165,8 @@ def run_corpus_prep(
             cached = _try_resume(spark, out_dir, name, fp, lineage)
             if cached is not None:
                 return cached
-        out = _write_stage(build(), out_dir, name, fp, lineage)
+        with pin_scope():
+            out = _write_stage(build(), out_dir, name, fp, lineage)
         if extra_fn is not None:
             extra = extra_fn()
             if extra:
@@ -580,19 +582,14 @@ def run_incremental_snapshot(
     if prior_paths:
         corpus_banded = spark.read.parquet(*prior_paths)
     else:
-        from neuroner_spark.io import local_df
-
         corpus_banded = local_df(
             spark, [], "doc_id long, band_id int, band_hash long"
         )
-    # persist (NOT localCheckpoint): a long-lived driver runs this per
-    # micro-batch, and per-call checkpoint blocks have no releasable
-    # handle — the r5 streaming-leak class.  The banded frame is
-    # reused by the decisions plan and the store append, then released;
-    # decisions themselves round-trip through their own idempotent
-    # partition, so the returned frame is DISK-BACKED and pins nothing.
-    banded_new = minhash_banded(new_docs, n, bands, id_col, text_col, fast_hash).persist()
-    try:
+    # the banded frame feeds the decisions plan and the store append;
+    # decisions round-trip through their own idempotent partition, so
+    # the returned frame is disk-backed and nothing stays pinned
+    with pin_scope():
+        banded_new = pin(minhash_banded(new_docs, n, bands, id_col, text_col, fast_hash), "persist")
         incremental_near_dedup(
             new_docs,
             corpus_banded,
@@ -614,8 +611,6 @@ def run_incremental_snapshot(
         banded_new.join(F.broadcast(kept_ids), "doc_id", "left_semi").write.mode(
             "overwrite"
         ).parquet(os.path.join(bands_root, f"snapshot={snapshot_id}"))
-    finally:
-        banded_new.unpersist(blocking=False)
     counts = {r["status"]: r["n"] for r in decisions.groupBy("status").agg(F.count("*").alias("n")).collect()}
     return {
         "decisions": decisions,

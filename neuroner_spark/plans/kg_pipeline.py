@@ -40,7 +40,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from neuroner_spark.io import read_table, write_table
+from neuroner_spark.io import local_df, pin, pin_scope, read_table, write_table
 from neuroner_spark.functions.normalize import normalize_whitespace
 from neuroner_spark.functions.tokenize import tokenize
 from neuroner_spark.operators.components import connected_components
@@ -219,8 +219,6 @@ def canonical_map(alias_dict: DataFrame, small_threshold: int = 100_000) -> Data
         # local_df (r7): the mapping is broadcast-joined by every
         # triples caller — a LocalRelation build keeps the broadcast
         # off the Python-RDD evaluation path (~0.3 s/build at local[32])
-        from neuroner_spark.io import local_df
-
         comp = local_df(
             spark, mapping or [(None, None)], "entity_id long, canonical_id long"
         ).filter(F.col("entity_id").isNotNull())
@@ -373,8 +371,6 @@ def verb_triples_from_mentions(
     if type_constraints is not None:
         cons = type_constraints
         if not isinstance(cons, DataFrame):
-            from neuroner_spark.io import local_df
-
             cons = local_df(
                 m.sparkSession, list(cons), "vtok string, subj_type string, obj_type string"
             )
@@ -403,7 +399,6 @@ def triples_from_linked(
     canon: DataFrame,
     pages_meta: DataFrame,
     max_entities_per_doc: int = MAX_ENTITIES_PER_DOC,
-    pinned: list | None = None,
     verb_lexicon: list[str] | None = None,
     tokens: DataFrame | None = None,
     verb_max_gap: int = VERB_MAX_GAP,
@@ -418,13 +413,6 @@ def triples_from_linked(
     above ``max_entities_per_doc`` are excluded from co-occurrence
     pairing (their same_sentence/near triples — bounded by sentence
     length — are kept); ``co_occurrence_capped_docs`` lists them.
-
-    ``pinned``: a LONG-LIVED caller (the streaming pipeline, once per
-    micro-batch) must pass its release list — the branched frame is
-    then persist()ed and appended so the caller can unpersist it after
-    the batch's writes; the default localCheckpoint pins blocks with
-    NO releasable handle (the r5 streaming-leak class) and is only
-    safe for run-once batch jobs.
 
     ``verb_lexicon`` + ``tokens``: adds the DIRECTED verb-mediated
     predicate family (``verb_triples_from_mentions``) to the output —
@@ -446,11 +434,7 @@ def triples_from_linked(
     # a/b); without materialization every branch re-executes the
     # whole upstream (tokenize -> match -> link — or the tagger) —
     # at 100 TB that is the single worst plan mistake available
-    if pinned is not None:
-        m = m.persist()
-        pinned.append(m)
-    else:
-        m = m.localCheckpoint()
+    m = pin(m, "local_checkpoint")
     # ONE doc-keyed exchange over the materialized frame (r7):
     # localCheckpoint erases partitioning metadata (the physical plan
     # reads back UnknownPartitioning), so without this every branch
@@ -612,7 +596,8 @@ def run_pipeline(
             cached = _try_resume(spark, out_dir, name, fp, lineage)
             if cached is not None:
                 return cached
-        return _write_stage(build(), out_dir, name, fp, lineage)
+        with pin_scope():
+            return _write_stage(build(), out_dir, name, fp, lineage)
 
     # reference `tokenizer` INI param: resolve the name to an injected
     # fn (None = pinned-regex fast path); a tokenizer switch invalidates
@@ -746,14 +731,13 @@ def run_incremental_canonical(
     if prior_snaps:
         prior = spark.read.parquet(prior_snaps[-1][1])
     else:
-        from neuroner_spark.io import local_df
-
         prior = local_df(spark, [], "entity_id long, canonical_id long")
-    out = merge_canonical_snapshots(prior, new_edges)
     map_dir = os.path.join(map_root, f"snapshot={snapshot_id}")
     sup_dir = os.path.join(store_dir, "superseded", f"snapshot={snapshot_id}")
-    out["mapping"].write.mode("overwrite").parquet(map_dir)
-    out["superseded"].write.mode("overwrite").parquet(sup_dir)
+    with pin_scope():
+        out = merge_canonical_snapshots(prior, new_edges)
+        out["mapping"].write.mode("overwrite").parquet(map_dir)
+        out["superseded"].write.mode("overwrite").parquet(sup_dir)
     mapping = spark.read.parquet(map_dir)
     superseded = spark.read.parquet(sup_dir)
     return {
@@ -857,8 +841,6 @@ def _resolved_superseded(spark: SparkSession, canon_store: str) -> DataFrame | N
         return x
 
     resolved = [(o, final(o)) for o in nxt]
-    from neuroner_spark.io import local_df
-
     return local_df(spark, resolved, "old_canonical_id long, canonical_id long")
 
 
@@ -1027,8 +1009,6 @@ def run_incremental_aliases(
     if prior_snaps:
         prior = spark.read.parquet(prior_snaps[-1][1])
     else:
-        from neuroner_spark.io import local_df
-
         prior = local_df(spark, [], "alias_norm string, min_entity long")
     batch = (
         alias_increment.select("alias_norm", F.col("entity_id").cast("long"))

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from neuroner_spark.io import pin, pin_scope
+
 PAGES_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -169,15 +171,16 @@ def run_streaming_pipeline(
         issued = spark.read.parquet(snaps[-1][1]).withColumnRenamed(
             "canonical_id", "_c"
         )
-        canon = (
+        # one read at stream start, not per batch
+        canon = pin(
             alias_dict.select("entity_id")
             .distinct()
             .join(issued, "entity_id", "left")
             .select(
                 "entity_id",
                 F.coalesce("_c", F.col("entity_id")).alias("canonical_id"),
-            )
-            .localCheckpoint()  # one read at stream start, not per batch
+            ),
+            "local_checkpoint",
         )
     else:
         canon = canonical_map(alias_dict)
@@ -185,150 +188,128 @@ def run_streaming_pipeline(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # the persist below pins blocks in executor storage; under a
-        # continuous (non-availableNow) trigger those would accumulate
-        # across micro-batches if left to driver GC — so the pinned
-        # frame is captured and explicitly unpersisted once the
-        # batch's writes are done.  DataFrame.unpersist targets the
-        # SAME cached plan that persist() registered; the previous
-        # localCheckpoint + df.rdd.unpersist pairing did NOT
-        # (DataFrame.rdd builds a fresh, never-persisted RDD, so the
-        # checkpointed blocks leaked).  Eager pinning isn't required
-        # here — the first action (the rejects write) populates the
-        # cache for the accepted-side reuse.
-        pinned: list[DataFrame] = []
-        try:
-            _run_batch(batch_df, batch_id, pinned)
-        finally:
-            for df in pinned:
-                df.unpersist(blocking=False)
-
-    def _run_batch(batch_df: DataFrame, batch_id: int, pinned: list) -> None:
-        if min_quality is not None or benchmark is not None or dedup_store_dir is not None:
-            gated = batch_df.withColumn("_quality", quality_score(F.col("text")))
-            reason = F.lit(None).cast("string")
-            if benchmark is not None:
-                contam = benchmark_contamination(
-                    gated,
-                    benchmark,
-                    n=contamination_n,
-                    flag_threshold=contamination_threshold,
-                    id_col="url",
-                ).select(F.col("doc_id").alias("url"), F.col("flagged").alias("_contaminated"))
-                gated = gated.join(contam, "url", "left")
-                reason = F.when(F.coalesce("_contaminated", F.lit(False)), F.lit("contaminated"))
-            if min_quality is not None:
-                reason = F.coalesce(
-                    reason,
-                    F.when(F.col("_quality") < min_quality, F.lit("low_quality")),
-                )
-            gated = gated.withColumn("_reject_reason", reason)
-            # the batch frame branches into rejects + accepted; pin it
-            # so the gate expressions (and any tagger upstream) run once
-            gated = gated.persist()
-            pinned.append(gated)
-            if dedup_store_dir is not None:
-                from neuroner_spark.plans.corpus_pipeline import run_incremental_snapshot
-
-                accepted = gated.filter(F.col("_reject_reason").isNull())
-                snap_src = accepted.select(F.xxhash64("url").alias("doc_id"), "text")
-                if not snap_src.isEmpty():
-                    # spill the batch's dedup input to a scratch
-                    # partition and read it back: the dedup's
-                    # pair/star-edge unions trip Catalyst's Union
-                    # constraint rewrite (key-not-found on a pruned
-                    # attribute) when the micro-batch's cloned-session
-                    # lineage flows into them, and localCheckpoint
-                    # would pin blocks with no releasable handle (the
-                    # r5 streaming-leak lesson).  Overwrite of the
-                    # batch's own path = retry-idempotent like every
-                    # sink here.
-                    intake = os.path.join(
-                        dedup_store_dir, "intake", f"batch_id={batch_id}"
+        # every pin made for this batch is released once its writes are
+        # done — under a continuous trigger they would otherwise pile up
+        # across micro-batches
+        with pin_scope():
+            if min_quality is not None or benchmark is not None or dedup_store_dir is not None:
+                gated = batch_df.withColumn("_quality", quality_score(F.col("text")))
+                reason = F.lit(None).cast("string")
+                if benchmark is not None:
+                    contam = benchmark_contamination(
+                        gated,
+                        benchmark,
+                        n=contamination_n,
+                        flag_threshold=contamination_threshold,
+                        id_col="url",
+                    ).select(F.col("doc_id").alias("url"), F.col("flagged").alias("_contaminated"))
+                    gated = gated.join(contam, "url", "left")
+                    reason = F.when(F.coalesce("_contaminated", F.lit(False)), F.lit("contaminated"))
+                if min_quality is not None:
+                    reason = F.coalesce(
+                        reason,
+                        F.when(F.col("_quality") < min_quality, F.lit("low_quality")),
                     )
-                    snap_src.write.mode("overwrite").parquet(intake)
-                    snap = spark.read.parquet(intake)
-                    decisions = run_incremental_snapshot(
-                        spark,
-                        snap,
-                        dedup_store_dir,
-                        snapshot_id=batch_id,
-                        fast_hash=True,
-                    )["decisions"]
-                    dups = decisions.filter(F.col("status") != "kept").select(
-                        F.col("doc_id").alias("_did"),
-                        F.lit("near_duplicate").alias("_dup_reason"),
-                    )
-                    gated = (
-                        gated.withColumn("_did", F.xxhash64("url"))
-                        .join(F.broadcast(dups), "_did", "left")
-                        .withColumn(
-                            "_reject_reason",
-                            F.coalesce(F.col("_reject_reason"), F.col("_dup_reason")),
+                gated = gated.withColumn("_reject_reason", reason)
+                # the batch frame branches into rejects + accepted; pin it
+                # so the gate expressions (and any tagger upstream) run once
+                gated = pin(gated, "persist")
+                if dedup_store_dir is not None:
+                    from neuroner_spark.plans.corpus_pipeline import run_incremental_snapshot
+
+                    accepted = gated.filter(F.col("_reject_reason").isNull())
+                    snap_src = accepted.select(F.xxhash64("url").alias("doc_id"), "text")
+                    if not snap_src.isEmpty():
+                        # spill the batch's dedup input to a scratch
+                        # partition and read it back: the dedup's
+                        # pair/star-edge unions trip Catalyst's Union
+                        # constraint rewrite (key-not-found on a pruned
+                        # attribute) when the micro-batch's cloned-session
+                        # lineage flows into them.  Overwrite of the
+                        # batch's own path = retry-idempotent like every
+                        # sink here.
+                        intake = os.path.join(
+                            dedup_store_dir, "intake", f"batch_id={batch_id}"
                         )
-                        .drop("_did", "_dup_reason")
+                        snap_src.write.mode("overwrite").parquet(intake)
+                        snap = spark.read.parquet(intake)
+                        decisions = run_incremental_snapshot(
+                            spark,
+                            snap,
+                            dedup_store_dir,
+                            snapshot_id=batch_id,
+                            fast_hash=True,
+                        )["decisions"]
+                        dups = decisions.filter(F.col("status") != "kept").select(
+                            F.col("doc_id").alias("_did"),
+                            F.lit("near_duplicate").alias("_dup_reason"),
+                        )
+                        gated = (
+                            gated.withColumn("_did", F.xxhash64("url"))
+                            .join(F.broadcast(dups), "_did", "left")
+                            .withColumn(
+                                "_reject_reason",
+                                F.coalesce(F.col("_reject_reason"), F.col("_dup_reason")),
+                            )
+                            .drop("_did", "_dup_reason")
+                        )
+                if rejects_dir is not None:
+                    rejects = gated.filter(F.col("_reject_reason").isNotNull()).select(
+                        "url", "warc_ts", "lang", F.col("_reject_reason").alias("reject_reason")
                     )
-            if rejects_dir is not None:
-                rejects = gated.filter(F.col("_reject_reason").isNotNull()).select(
-                    "url", "warc_ts", "lang", F.col("_reject_reason").alias("reject_reason")
+                    rejects.write.mode("overwrite").parquet(
+                        os.path.join(rejects_dir, f"batch_id={batch_id}")
+                    )
+                batch_df = gated.filter(F.col("_reject_reason").isNull()).drop(
+                    "_quality", "_contaminated", "_reject_reason"
                 )
-                rejects.write.mode("overwrite").parquet(
-                    os.path.join(rejects_dir, f"batch_id={batch_id}")
+                if batch_df.isEmpty():
+                    return
+            if incremental_canonical:
+                # fold this batch's same-as evidence into the issued-id
+                # store BEFORE building triples: merges retire ids now,
+                # this batch writes under the updated mapping, and the
+                # snapshot's superseded partition is the audit record
+                # earlier batches re-key by (read_streaming_triples).
+                # The mapping/superseded frames round-trip through their
+                # own parquet partitions inside run_incremental_canonical,
+                # so nothing here pins executor storage across batches.
+                from neuroner_spark.plans.kg_pipeline import (
+                    run_incremental_canonical,
+                    sameas_edges_from_aliases,
                 )
-            batch_df = gated.filter(F.col("_reject_reason").isNull()).drop(
-                "_quality", "_contaminated", "_reject_reason"
-            )
-            if batch_df.isEmpty():
-                return
-        if incremental_canonical:
-            # fold this batch's same-as evidence into the issued-id
-            # store BEFORE building triples: merges retire ids now,
-            # this batch writes under the updated mapping, and the
-            # snapshot's superseded partition is the audit record
-            # earlier batches re-key by (read_streaming_triples).
-            # The mapping/superseded frames round-trip through their
-            # own parquet partitions inside run_incremental_canonical,
-            # so nothing here pins executor storage across batches.
-            from neuroner_spark.plans.kg_pipeline import (
-                run_incremental_canonical,
-                sameas_edges_from_aliases,
-            )
 
-            edges = sameas_edges_from_aliases(alias_dict).unionByName(
-                alias_dict.select(F.col("entity_id").cast("long").alias("src"))
-                .distinct()
-                .withColumn("dst", F.col("src"))
+                edges = sameas_edges_from_aliases(alias_dict).unionByName(
+                    alias_dict.select(F.col("entity_id").cast("long").alias("src"))
+                    .distinct()
+                    .withColumn("dst", F.col("src"))
+                )
+                if sameas_evidence_fn is not None:
+                    ev = sameas_evidence_fn(batch_df, batch_id)
+                    if ev is not None:
+                        edges = edges.unionByName(
+                            ev.select(F.col("src").cast("long"), F.col("dst").cast("long"))
+                        )
+                batch_canon = run_incremental_canonical(
+                    spark, edges, canonical_store_dir, snapshot_id=batch_id + 1
+                )["mapping"]
+            else:
+                batch_canon = canon
+            norm = normalize_pages(batch_df)
+            tokens = tokenize(norm)
+            if mention_source == "neural":
+                mentions = neural_mentions(spark, tokens, bundle)
+            else:
+                mentions = match_mentions(tokens, alias_dict)
+            linked = link_mentions(mentions, alias_dict, use_fuzzy=False)
+            meta = norm.select(F.col("doc_id").alias("url"), "warc_ts")
+            triples = triples_from_linked(
+                linked, batch_canon, meta, verb_lexicon=verb_lexicon, tokens=tokens
             )
-            if sameas_evidence_fn is not None:
-                ev = sameas_evidence_fn(batch_df, batch_id)
-                if ev is not None:
-                    edges = edges.unionByName(
-                        ev.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-                    )
-            batch_canon = run_incremental_canonical(
-                spark, edges, canonical_store_dir, snapshot_id=batch_id + 1
-            )["mapping"]
-        else:
-            batch_canon = canon
-        norm = normalize_pages(batch_df)
-        tokens = tokenize(norm)
-        if mention_source == "neural":
-            mentions = neural_mentions(spark, tokens, bundle)
-        else:
-            mentions = match_mentions(tokens, alias_dict)
-        linked = link_mentions(mentions, alias_dict, use_fuzzy=False)
-        meta = norm.select(F.col("doc_id").alias("url"), "warc_ts")
-        # pinned= threads the branched mention frame into this batch's
-        # release list — triples_from_linked's default localCheckpoint
-        # would pin one unreleasable RDD PER MICRO-BATCH
-        triples = triples_from_linked(
-            linked, batch_canon, meta, pinned=pinned,
-            verb_lexicon=verb_lexicon, tokens=tokens,
-        )
-        # deterministic per-batch path + overwrite = retry-idempotent
-        triples.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
+            # deterministic per-batch path + overwrite = retry-idempotent
+            triples.write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"batch_id={batch_id}")
+            )
 
     q = (
         read_pages_stream(spark, landing_dir)

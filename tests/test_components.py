@@ -1,9 +1,13 @@
 """J10 connected components vs a single-machine union-find golden."""
 
+import pytest
+
 from neuroner_spark.fixtures.gen import sameas_df
+from neuroner_spark.io import pin_scope
 from neuroner_spark.operators.components import connected_components
 
 
+@pytest.mark.usefixtures("no_leaked_pins")
 def test_connected_components_matches_union_find(spark):
     edges, golden = sameas_df(spark, n_clusters=30)
     edge_rows = edges.collect()
@@ -17,6 +21,7 @@ def test_connected_components_matches_union_find(spark):
         assert comp == golden[node], (node, comp, golden[node])
 
 
+@pytest.mark.usefixtures("no_leaked_pins")
 def test_two_triangles_and_chain(spark):
     rows = [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (20, 21), (21, 22), (22, 23), (23, 24)]
     edges = spark.createDataFrame(rows, "src long, dst long")
@@ -43,6 +48,7 @@ def test_canonical_map_distributed_fallback_matches_unionfind(spark):
     assert fast == dist and len(fast) > 0
 
 
+@pytest.mark.usefixtures("no_leaked_pins")
 def test_cc_driver_fast_path_matches_star_loop(spark):
     """r6 small_threshold driver union-find vs the forced distributed
     star loop: identical (node, component) output — including self
@@ -56,12 +62,15 @@ def test_cc_driver_fast_path_matches_star_loop(spark):
         (r["node"], r["component"])
         for r in connected_components(with_self, iteration_log=log_fast).collect()
     }
-    dist = {
-        (r["node"], r["component"])
-        for r in connected_components(
-            with_self, iteration_log=log_dist, small_threshold=0
-        ).collect()
-    }
+    # the star loop's answer lazily reads its pinned frames: collect it
+    # inside a scope, whose exit releases them
+    with pin_scope():
+        dist = {
+            (r["node"], r["component"])
+            for r in connected_components(
+                with_self, iteration_log=log_dist, small_threshold=0
+            ).collect()
+        }
     assert fast == dist and (999_999, 999_999) in fast
     # the fast path really ran driver-side, the forced path really looped
     assert len(log_fast) == 1 and log_fast[0].get("mode") == "driver"
@@ -233,6 +242,24 @@ def test_pagerank_matches_numpy_power_iteration(spark):
         assert abs(got[i] - r[i]) < 1e-9, (i, got[i], r[i])
     assert log and log[-1]["l1_delta"] < 1e-9  # converged, logged
 
+
+
+def test_pagerank_plan_grows_linearly(spark):
+    """Between lineage cuts a round's plan reads the previous rank frame
+    once: with checkpoint_interval=0 the analyzed plan at 6 rounds is
+    under 3x its length at 3 rounds (re-reading the previous round twice
+    doubles the plan every round — 8x)."""
+    from neuroner_spark.operators.graph_rank import pagerank
+
+    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long")
+
+    def plan_len(rounds: int) -> int:
+        ranks = pagerank(edges, max_iter=rounds, tol=0.0, checkpoint_interval=0)
+        n = len(ranks._jdf.queryExecution().analyzed().toString())
+        ranks.unpersist()
+        return n
+
+    assert plan_len(6) < 3 * plan_len(3)
 
 def test_pagerank_undirected_symmetry(spark):
     """On an undirected path a-b-c the endpoints tie and the middle

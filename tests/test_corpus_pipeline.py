@@ -174,6 +174,7 @@ def test_corpus_prep_span_removal_stage(spark, tmp_path):
     assert "Extra tail." in kept[1]["text"]
 
 
+@pytest.mark.usefixtures("no_leaked_pins")
 def test_corpus_prep_lang_gate(spark, tmp_path):
     """keep_lang inserts the CCNet-style gate right after exact dedup:
     the German page never reaches banding/components; the English
@@ -294,6 +295,7 @@ def test_corpus_prep_winnow_stage(spark, tmp_path):
     assert not by3["corpus"].get("resumed")
 
 
+@pytest.mark.usefixtures("no_leaked_pins")
 def test_corpus_prep_simhash_method(spark, tmp_path):
     """near_method='simhash' (r6): same stage contract as minhash but
     the shared scan is one 64-bit signature per doc.  Covers the three
@@ -366,6 +368,7 @@ def test_corpus_prep_simhash_method(spark, tmp_path):
     assert not by3["near_components"].get("resumed")
 
 
+@pytest.mark.usefixtures("no_leaked_pins")
 def test_incremental_snapshot_store(spark, tmp_path):
     """Snapshot store E2E: snapshot 0 seeds the band store; snapshot 1
     dedups against it via signatures only; a retried snapshot

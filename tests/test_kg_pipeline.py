@@ -148,6 +148,7 @@ def test_pipeline_records_capped_docs_stage(pipeline_out):
     assert res["co_occurs_capped"].count() == 0
 
 
+@pytest.mark.usefixtures("no_leaked_pins")
 def test_input_change_invalidates_checkpoint(spark, pipeline_out):
     _res, out, pages, aliases = pipeline_out
     fewer = pages.limit(150)
@@ -200,6 +201,7 @@ def test_fuzzy_linking_covers_typos(spark):
     assert rows[0]["canonical_name"] == "Alder Analytics"
 
 
+@pytest.mark.usefixtures("no_leaked_pins")
 def test_neural_pipeline_end_to_end(spark, tmp_path):
     """North-star core path: BiLSTM-CRF mentions feed linking/triples."""
     from neuroner_spark.fixtures.gen import alias_df, pages_df
@@ -230,6 +232,7 @@ def test_neural_pipeline_end_to_end(spark, tmp_path):
     assert sorted(map(tuple, res2["triples"].collect())) == t1
 
 
+@pytest.mark.usefixtures("no_leaked_pins")
 def test_mention_source_switch_invalidates_downstream(spark, tmp_path):
     """ADVICE fix: switching gazetteer -> neural with resume=True must
     rebuild mentions AND linked AND triples (the mention-source is part
@@ -544,6 +547,7 @@ def test_rekey_triples_through_superseded(spark):
     }
 
 
+@pytest.mark.usefixtures("no_leaked_pins")
 def test_run_incremental_kg_lifecycle(spark, tmp_path):
     """Full incremental composition: dedup gate drops a re-crawled
     page; same-as evidence merges issued ids with a superseded record;

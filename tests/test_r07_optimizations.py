@@ -136,7 +136,7 @@ def test_local_df_localrelation_and_parity(spark):
     the empty-frame and None-row shapes the callers rely on."""
     import pandas as pd
 
-    from neuroner_spark.io import _ddl_field_names, local_df
+    from neuroner_spark.io import local_df
 
     rows = [("a", 1, 0.5), ("b", 2, None)]
     ddl = "name string, n long, score double"
@@ -159,11 +159,10 @@ def test_local_df_localrelation_and_parity(spark):
         (2, "v"),
     ]
     # nested-type DDL name parsing must not split on inner commas
-    assert _ddl_field_names("cell int, centroid array<double>, m map<string,int>") == [
-        "cell",
-        "centroid",
-        "m",
-    ]
+    nested = local_df(
+        spark, [(1, [0.5], {"a": 1})], "cell int, centroid array<double>, m map<string,int>"
+    )
+    assert nested.columns == ["cell", "centroid", "m"]
 
 
 def test_tokenize_ascii_vector_path_parity(spark):
