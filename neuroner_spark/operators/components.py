@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from neuroner_spark.io import local_df, pin, release
+from neuroner_spark.io import collect_small, local_df, pin, release
 
 MAX_ITER = 50
 
@@ -57,27 +57,46 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.filter(F.col("src") != F.col("dst")).distinct()
 
 
+def min_root_components(pairs) -> dict[int, int]:
+    """Driver-side union-find over ``(a, b)`` int pairs: node -> the
+    smallest node connected to it, for every node named in ``pairs``
+    (a self pair ``(x, x)`` only names ``x``).  The larger root always
+    attaches under the smaller, so every root is its component's
+    minimum — the star loop's invariant.  Path halving."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(int(a)), find(int(b))
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
 def connected_components(
     edges: DataFrame,
     max_iter: int = MAX_ITER,
     iteration_log: list | None = None,
-    small_threshold: int = 100_000,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) with component = min node id
     reachable.  Driver loop with localCheckpoint-per-round.
 
-    ``small_threshold`` (r6): edge sets at or under this many DISTINCT
-    rows take a driver union-find fast path — the distinct frame is
-    materialized ONCE (the loop needed that anyway), probed with a
-    bounded ``limit().collect()`` off the cached blocks, and the whole
-    answer comes back as one ``createDataFrame`` instead of ~2 jobs
-    per star round plus a final join (measured: the CC rounds cost
-    ~4.7 s of driver-latency-bound small jobs at a 50k-doc snapshot
-    REGARDLESS of parallelism — the incremental-ingest floor).  Same
-    min-id semantics, exercised by the same oracle (the sf0.01
-    `connected_components` query rides this path; the 5M-doc corpus
-    runs stay on the distributed loop).  Pass ``small_threshold=0``
-    to force the loop.
+    Small inputs (r6): when the DISTINCT edge frame has at most
+    ``io.DRIVER_ROWS_LIMIT`` rows (``io.collect_small``), the answer is
+    a driver union-find — the distinct frame is materialized ONCE (the
+    loop needed that anyway), probed with one bounded Arrow transfer
+    off the cached blocks, and the whole answer comes back as one
+    ``local_df`` instead of ~2 jobs per star round plus a final join
+    (measured: the CC rounds cost ~4.7 s of driver-latency-bound small
+    jobs at a 50k-doc snapshot REGARDLESS of parallelism — the
+    incremental-ingest floor).  Same min-id semantics, exercised by the
+    same oracle (the sf0.01 `connected_components` query rides this
+    path; the 5M-doc corpus runs stay on the distributed loop).
 
     ``iteration_log`` (r6, r5 verdict #5): pass a list and each
     large-star/small-star round appends ``{"iter", "edges", "wall_sec"}``
@@ -94,50 +113,33 @@ def connected_components(
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long")).distinct(),
         "local_checkpoint",
     )
-    if small_threshold:
-        t0 = time.time()
-        # Arrow toPandas, not collect() (r7): measured ~2x cheaper on
-        # the driver for the same probe (guide: Arrow for transfers)
-        sample = base.limit(small_threshold + 1).toPandas()
-        if len(sample) <= small_threshold:
-            parent: dict[int, int] = {}
-
-            def find(x: int) -> int:
-                while parent.setdefault(x, x) != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            # attach the larger root under the smaller -> every root is
-            # its component's minimum (same invariant as the star loop)
-            for s, dd in zip(sample["src"], sample["dst"]):
-                a, b = find(int(s)), find(int(dd))
-                if a != b:
-                    parent[max(a, b)] = min(a, b)
-            rows = [(n, find(n)) for n in parent]
-            if iteration_log is not None:
-                iteration_log.append(
-                    {
-                        "iter": 0,
-                        "edges": len(sample),
-                        "wall_sec": round(time.time() - t0, 3),
-                        "mode": "driver",
-                    }
-                )
-            from pyspark.sql import types as T
-
-            release(base)  # the answer is driver-built; base is dead
-            schema = T.StructType(
-                [
-                    T.StructField("node", T.LongType(), False),
-                    T.StructField("component", T.LongType(), False),
-                ]
+    t0 = time.time()
+    sample = collect_small(base)
+    if sample is not None:
+        rows = list(min_root_components(zip(sample["src"], sample["dst"])).items())
+        if iteration_log is not None:
+            iteration_log.append(
+                {
+                    "iter": 0,
+                    "edges": len(sample),
+                    "wall_sec": round(time.time() - t0, 3),
+                    "mode": "driver",
+                }
             )
-            # local_df (r7): the component map is immediately joined
-            # back against the doc universe — a LocalRelation keeps
-            # that join's build side off the Python-RDD evaluation
-            # path (~0.3 s of worker spin-up per consumer at local[32])
-            return local_df(edges.sparkSession, rows, schema)
+        from pyspark.sql import types as T
+
+        release(base)  # the answer is driver-built; base is dead
+        schema = T.StructType(
+            [
+                T.StructField("node", T.LongType(), False),
+                T.StructField("component", T.LongType(), False),
+            ]
+        )
+        # local_df (r7): the component map is immediately joined
+        # back against the doc universe — a LocalRelation keeps
+        # that join's build side off the Python-RDD evaluation
+        # path (~0.3 s of worker spin-up per consumer at local[32])
+        return local_df(edges.sparkSession, rows, schema)
     cur = base.filter(F.col("src") != F.col("dst"))
     singletons = (
         base.select(F.col("src").alias("node"))

@@ -1,11 +1,19 @@
-"""Entity-importance ranking over the materialized KG: PageRank as
-iterative DataFrame joins (Page et al. 1999; the standard MapReduce
-formulation), the analytics consumer of the triple store's entity/edge
-tables — same execution discipline as ``operators/components.py``
-(each round pinned through ``io.pin``, lineage cut every few rounds,
-one driver action per round).
+"""Entity-importance ranking over the materialized KG: PageRank (Page
+et al. 1999), the analytics consumer of the triple store's entity/edge
+tables.  Two paths, selected by the input's row count, with one set of
+semantics (same dangling-mass redistribution, same L1 early exit, same
+``iteration_log``):
 
-Scale shape at 10^9-node graphs:
+- at most ``io.DRIVER_ROWS_LIMIT`` raw edges (``io.collect_small``):
+  one bounded Arrow probe, then numpy power iteration on the driver —
+  a small graph's per-round Spark jobs are scheduler latency, not work
+  (the ``connected_components`` / ``canonical_map`` rule);
+- larger graphs: iterative DataFrame joins (the standard MapReduce
+  formulation) with the same execution discipline as
+  ``operators/components.py`` (each round pinned through ``io.pin``,
+  lineage cut every few rounds, one driver action per round).
+
+Scale shape of the distributed loop at 10^9-node graphs:
   - the edge table is the only corpus-sized frame; each iteration is
     ONE equi-join (ranks x out-degrees on src) + ONE groupBy(dst) sum
     — both shuffles keyed on node id, and the join side reuses the
@@ -22,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from neuroner_spark.io import pin, release
+from neuroner_spark.io import collect_small, local_df, pin, release
 
 
 def pagerank(
@@ -39,7 +47,13 @@ def pagerank(
     ``undirected``: symmetrize first (co-occurrence graphs are
     undirected; verb-predicate graphs are directed).
     ``iteration_log``: appends {'iter', 'l1_delta', 'wall_sec'} per
-    round (the components.py observability contract).
+    round (the components.py observability contract); ``l1_delta`` is
+    logged when ``tol > 0``.
+
+    Path: edge inputs (non-null endpoints, before dedup) of at most
+    ``io.DRIVER_ROWS_LIMIT`` rows are ranked on the driver
+    (``_pagerank_driver``, log entries tagged ``mode='driver'``) and
+    come back as a ``local_df``; larger ones run the loop below.
 
     Partition-reuse structure: the static frames are pinned with
     ``persist`` behind explicit hash repartitions (edges by src,
@@ -60,8 +74,15 @@ def pagerank(
     import time
 
     spark = edges.sparkSession
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     e = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
+    # nulls dropped Spark-side: a null-bearing long column reaches
+    # pandas as float64, which rounds ids above 2^53
+    small = collect_small(e.dropna())
+    if small is not None:
+        return _pagerank_driver(
+            spark, small, damping, max_iter, tol, undirected, iteration_log
+        )
+    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if undirected:
         e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     e = pin(
@@ -138,6 +159,49 @@ def pagerank(
     for df in (e, out_deg, nodes):
         release(df)
     return ranks
+
+
+def _pagerank_driver(
+    spark, pdf, damping, max_iter, tol, undirected, iteration_log
+) -> DataFrame:
+    """``pagerank``'s loop in numpy over a collected (src, dst) pandas
+    frame: the same graph (self-loops dropped, symmetrized if
+    ``undirected``, unique pairs), the same per-round formula in the
+    same association, the same dangling mass and ``tol`` exit."""
+    import time
+
+    import numpy as np
+    import pandas as pd
+
+    e = pdf.to_numpy(dtype=np.int64).reshape(-1, 2)
+    if undirected:
+        e = np.concatenate([e, e[:, ::-1]])
+    e = np.unique(e[e[:, 0] != e[:, 1]], axis=0)
+    nodes = np.unique(e)
+    n = len(nodes)
+    schema = "node long, rank double"
+    if n == 0:
+        return local_df(spark, [], schema)
+    src, dst = np.searchsorted(nodes, e[:, 0]), np.searchsorted(nodes, e[:, 1])
+    deg = np.bincount(src, minlength=n)
+    dangling = deg == 0
+    ranks = np.full(n, 1.0 / n)
+    dang = ranks[dangling].sum()
+    for i in range(max_iter):
+        t0 = time.time()
+        inflow = np.bincount(dst, weights=ranks[src] / deg[src], minlength=n)
+        new_ranks = (1.0 - damping) / n + damping * dang / n + damping * inflow
+        delta = float(np.abs(new_ranks - ranks).sum()) if tol > 0 else None
+        dang = new_ranks[dangling].sum()
+        ranks = new_ranks
+        if iteration_log is not None:
+            entry = {"iter": i, "wall_sec": round(time.time() - t0, 3), "mode": "driver"}
+            if delta is not None:
+                entry["l1_delta"] = delta
+            iteration_log.append(entry)
+        if delta is not None and delta < tol:
+            break
+    return local_df(spark, pd.DataFrame({"node": nodes, "rank": ranks}), schema)
 
 
 def entity_pagerank(spark, store_dir: str, pred: str = "co_occurs_with", **kw) -> DataFrame:

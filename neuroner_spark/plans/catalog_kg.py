@@ -133,7 +133,10 @@ def q_connected_components(spark, sf_dir):
     the full DuckDB-oracle surface: the oracle unrolls the power
     iteration (PAGERANK_ITERS plain aggregation CTEs, including the
     dangling-mass redistribution — every nation is a dangling node
-    here), values rounded to 6dp per the float-hash convention."""
+    here), values rounded to 6dp per the float-hash convention.  At
+    sf0.01 and sf0.1 the graph is under ``io.DRIVER_ROWS_LIMIT`` edges,
+    so both variants take their operator's driver path; the unit tests
+    cover the distributed loops."""
     from neuroner_spark.operators.graph_rank import pagerank
 
     e = _edges(spark, sf_dir)

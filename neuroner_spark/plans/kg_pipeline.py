@@ -40,10 +40,10 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from neuroner_spark.io import local_df, pin, pin_scope, read_table, write_table
+from neuroner_spark.io import collect_small, local_df, pin, pin_scope, read_table, write_table
 from neuroner_spark.functions.normalize import normalize_whitespace
 from neuroner_spark.functions.tokenize import tokenize
-from neuroner_spark.operators.components import connected_components
+from neuroner_spark.operators.components import connected_components, min_root_components
 from neuroner_spark.operators.gazetteer import match_mentions
 from neuroner_spark.operators.linking import link_mentions
 
@@ -166,66 +166,36 @@ def sameas_edges_from_aliases(alias_dict: DataFrame) -> DataFrame:
     )
 
 
-def canonical_map(alias_dict: DataFrame, small_threshold: int = 100_000) -> DataFrame:
+def canonical_map(alias_dict: DataFrame) -> DataFrame:
     """entity_id -> canonical_id (= min entity id in the same-as
     component).
 
     The alias dictionary is the broadcast-SMALL side by contract, so
-    the default path collects the (alias_norm, entity_id) rows in ONE
-    job and does the whole thing driver-side — grouping, union-find,
-    and the singleton fill — returning one broadcast createDataFrame.
-    (The previous shape built the edge set as a Spark shuffle plus a
-    separate distinct+join for singletons: ~0.9 s of scheduler latency
-    for a 12-row dictionary at sf0.1.)  Dictionaries above
-    ``small_threshold`` rows fall back to the distributed
-    ``connected_components`` over the same-as edges (same min-id
-    semantics, oracle-checked)."""
-    spark = alias_dict.sparkSession
-    # Arrow toPandas, not collect() (r7): the row-collect path on this
-    # probe measured ~0.55 s against ~0.24 s for the Arrow transfer —
-    # pure driver/serialization latency on a dictionary-sized frame
-    # (guide: Arrow for driver transfers).
-    rows = alias_dict.select("alias_norm", "entity_id").limit(small_threshold + 1).toPandas()
-    if len(rows) <= small_threshold:
-        groups: dict[str, set[int]] = {}
-        for an, eid in zip(rows["alias_norm"], rows["entity_id"]):
-            groups.setdefault(an, set()).add(int(eid))
-        parent: dict[int, int] = {}
+    when it has at most ``io.DRIVER_ROWS_LIMIT`` rows the
+    (alias_norm, entity_id) rows are collected in ONE job
+    (``io.collect_small``) and the whole thing is done driver-side —
+    grouping, union-find and the singleton fill — returning one
+    ``local_df``.  (The previous shape built the edge set as a Spark
+    shuffle plus a separate distinct+join for singletons: ~0.9 s of
+    scheduler latency for a 12-row dictionary at sf0.1.)  Larger
+    dictionaries run the distributed ``connected_components`` over the
+    same-as edges (same min-id semantics, oracle-checked).
 
-        def find(x: int) -> int:
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
+    The result carries no broadcast hint: a stage writer would log the
+    hint as unused, and every consumer hints at its own join."""
+    rows = collect_small(alias_dict.select("alias_norm", "entity_id"))
+    if rows is not None:
         # same edge semantics as sameas_edges_from_aliases: each entity
-        # of an alias group unions with the group minimum
-        for ents in groups.values():
-            if len(ents) < 2:
-                continue
-            root = min(ents)
-            for e in ents:
-                a, b = find(root), find(e)
-                if a != b:
-                    parent[max(a, b)] = min(a, b)
-        comp_min: dict[int, int] = {}
-        for node in list(parent):
-            r = find(node)
-            comp_min[r] = min(comp_min.get(r, node), node)
-        all_ids = sorted({int(e) for e in rows["entity_id"]})
-        mapping = [
-            (eid, comp_min[find(eid)] if eid in parent else eid) for eid in all_ids
-        ]
+        # of an alias group unions with the group minimum; a one-entity
+        # group's self pair keeps the entity as its own canonical
+        roots = rows.groupby("alias_norm", dropna=False)["entity_id"].transform("min")
+        comp = min_root_components(zip(roots, rows["entity_id"]))
         # local_df (r7): the mapping is broadcast-joined by every
         # triples caller — a LocalRelation build keeps the broadcast
         # off the Python-RDD evaluation path (~0.3 s/build at local[32])
-        comp = local_df(
-            spark, mapping or [(None, None)], "entity_id long, canonical_id long"
-        ).filter(F.col("entity_id").isNotNull())
-        return F.broadcast(comp)  # bounded by small_threshold — safe to ship
-    # pragma: no cover - exercised via connected_components oracle
-    # NO broadcast hint here: the distributed fallback exists for
-    # component maps too big for the driver/executor memory
+        return local_df(
+            alias_dict.sparkSession, sorted(comp.items()), "entity_id long, canonical_id long"
+        )
     edges = sameas_edges_from_aliases(alias_dict)
     comp = connected_components(edges).select(
         F.col("node").alias("entity_id"), F.col("component").alias("canonical_id")

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from neuroner_spark.io import pin, pin_scope
+from neuroner_spark.io import pin, pin_scope, release
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -311,14 +311,20 @@ def run_streaming_pipeline(
                 os.path.join(out_dir, f"batch_id={batch_id}")
             )
 
-    q = (
-        read_pages_stream(spark, landing_dir)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        q = (
+            read_pages_stream(spark, landing_dir)
+            .writeStream.foreachBatch(process_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        # the stream-start snapshot is pinned outside every micro-batch
+        # scope; it is dead once the stream stops
+        if canonical_store_dir is not None and not incremental_canonical:
+            release(canon)
 
 
 def read_streaming_triples(

@@ -88,7 +88,8 @@ def main() -> None:
         alle = prior.select(
             F.col("entity_id").alias("src"), F.col("canonical_id").alias("dst")
         ).unionByName(new_edges)
-        cc = connected_components(alle, small_threshold=0)
+        # n + k edges: above io.DRIVER_ROWS_LIMIT, so the star loop runs
+        cc = connected_components(alle)
         m = cc.select(F.col("node").alias("entity_id"), F.col("component").alias("canonical_id"))
         return m, m.count()
 

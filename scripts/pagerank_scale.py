@@ -6,6 +6,11 @@ Graph: N nodes, ~E edges with Zipf-skewed destinations (hub-heavy,
 the real shape of entity co-occurrence graphs) — the skew stresses
 the groupBy(dst) aggregation exactly where a naive plan would hotspot.
 
+Each record carries the ``mode`` pagerank ran in: graphs of at most
+``io.DRIVER_ROWS_LIMIT`` edges are ranked on the driver, so a run with
+small CLI sizes does not measure the distributed loop.  The default
+sizes (5M edges) run the loop.
+
 Writes BENCH/pagerank_scale.json.
 Usage: python scripts/pagerank_scale.py [n_nodes] [n_edges] [iters]
 """
@@ -27,6 +32,11 @@ def probe() -> float:
     for i in range(2_000_000):
         x += i * i % 7
     return round(time.perf_counter() - t0, 3)
+
+
+def rank_mode(log: list) -> str:
+    """'driver' when pagerank's iteration_log is tagged so, else 'distributed'."""
+    return "driver" if log and log[0].get("mode") == "driver" else "distributed"
 
 
 def main() -> None:
@@ -57,6 +67,7 @@ def main() -> None:
     out = {
         "n_nodes_requested": n,
         "n_edges_requested": e,
+        "mode": rank_mode(log),
         "iterations": log,
         "total_wall_s": wall,
         "sec_per_iteration_median": sorted(x["wall_sec"] for x in log)[len(log) // 2],
@@ -112,7 +123,8 @@ wall = round(time.time()-t0, 3)
 iters_s = [x["wall_sec"] for x in it_log]
 # setup = the one-time edge distinct + node derivation + counts before
 # the loop (wall minus the logged rounds and the final count's share)
-print(json.dumps({{"wall_s": wall, "probe_sec": [p0, probe()],
+mode = "driver" if it_log and it_log[0].get("mode") == "driver" else "distributed"
+print(json.dumps({{"wall_s": wall, "mode": mode, "probe_sec": [p0, probe()],
                    "iteration_walls_s": iters_s,
                    "setup_and_final_s": round(wall - sum(iters_s), 3)}}))
 """
@@ -180,6 +192,7 @@ def convergence(n: int, e: int, max_iter: int = 25) -> None:
         d = json.load(f)
     d["convergence"] = {
         "n_nodes": n, "n_edges": e, "max_iter": max_iter,
+        "mode": rank_mode(log),
         "total_wall_s": wall, "probe_sec": [p0, probe()],
         "l1_delta_curve": [x["l1_delta"] for x in log],
         "sec_per_iteration": [x["wall_sec"] for x in log],

@@ -1,5 +1,6 @@
 import pytest
 
+from neuroner_spark import io
 from neuroner_spark.session import get_spark
 
 
@@ -27,3 +28,13 @@ def no_leaked_pins(spark):
     yield
     leaked = pinned() - before
     assert not leaked, f"RDDs left pinned: {sorted(leaked)}"
+
+
+@pytest.fixture
+def force_distributed(request, monkeypatch):
+    """Route every small-input probe (``io.collect_small``) to the
+    operators' distributed paths by setting ``io.DRIVER_ROWS_LIMIT`` to
+    0.  Parametrize it indirectly with ``[False, True]`` to run a test
+    on both paths; ``request.getfixturevalue`` switches it on mid-test."""
+    if getattr(request, "param", True):
+        monkeypatch.setattr(io, "DRIVER_ROWS_LIMIT", 0)

@@ -6,6 +6,11 @@ from neuroner_spark.fixtures.gen import sameas_df
 from neuroner_spark.io import pin_scope
 from neuroner_spark.operators.components import connected_components
 
+# run a test once on the driver paths and once forced distributed
+both_paths = pytest.mark.parametrize(
+    "force_distributed", [False, True], ids=["driver", "distributed"], indirect=True
+)
+
 
 @pytest.mark.usefixtures("no_leaked_pins")
 def test_connected_components_matches_union_find(spark):
@@ -33,24 +38,22 @@ def test_two_triangles_and_chain(spark):
     }
 
 
-def test_canonical_map_distributed_fallback_matches_unionfind(spark):
-    """small_threshold=0 forces the distributed large-star/small-star
-    path; its output must equal the driver union-find's exactly."""
+def test_canonical_map_distributed_fallback_matches_unionfind(spark, request):
+    """Forcing the distributed large-star/small-star path: its output
+    must equal the driver union-find's exactly."""
     from neuroner_spark.fixtures.gen import alias_df
     from neuroner_spark.plans.kg_pipeline import canonical_map
 
     aliases = alias_df(spark)
     fast = {(r["entity_id"], r["canonical_id"]) for r in canonical_map(aliases).collect()}
-    dist = {
-        (r["entity_id"], r["canonical_id"])
-        for r in canonical_map(aliases, small_threshold=0).collect()
-    }
+    request.getfixturevalue("force_distributed")
+    dist = {(r["entity_id"], r["canonical_id"]) for r in canonical_map(aliases).collect()}
     assert fast == dist and len(fast) > 0
 
 
 @pytest.mark.usefixtures("no_leaked_pins")
-def test_cc_driver_fast_path_matches_star_loop(spark):
-    """r6 small_threshold driver union-find vs the forced distributed
+def test_cc_driver_fast_path_matches_star_loop(spark, request):
+    """r6 small-input driver union-find vs the forced distributed
     star loop: identical (node, component) output — including self
     loops (node must still appear) and the min-root invariant."""
     edges, golden = sameas_df(spark, n_clusters=40)
@@ -64,12 +67,11 @@ def test_cc_driver_fast_path_matches_star_loop(spark):
     }
     # the star loop's answer lazily reads its pinned frames: collect it
     # inside a scope, whose exit releases them
+    request.getfixturevalue("force_distributed")
     with pin_scope():
         dist = {
             (r["node"], r["component"])
-            for r in connected_components(
-                with_self, iteration_log=log_dist, small_threshold=0
-            ).collect()
+            for r in connected_components(with_self, iteration_log=log_dist).collect()
         }
     assert fast == dist and (999_999, 999_999) in fast
     # the fast path really ran driver-side, the forced path really looped
@@ -208,7 +210,8 @@ def test_merge_canonical_matches_model_on_random_batches(spark):
         prior_rows = sorted(got.items())
 
 
-def test_pagerank_matches_numpy_power_iteration(spark):
+@both_paths
+def test_pagerank_matches_numpy_power_iteration(spark, force_distributed):
     """pagerank vs an independent numpy power iteration with the same
     dangling-mass redistribution, on a directed graph WITH a dangling
     node; ranks sum to 1."""
@@ -244,11 +247,13 @@ def test_pagerank_matches_numpy_power_iteration(spark):
 
 
 
+@pytest.mark.usefixtures("force_distributed")
 def test_pagerank_plan_grows_linearly(spark):
     """Between lineage cuts a round's plan reads the previous rank frame
     once: with checkpoint_interval=0 the analyzed plan at 6 rounds is
     under 3x its length at 3 rounds (re-reading the previous round twice
-    doubles the plan every round — 8x)."""
+    doubles the plan every round — 8x).  Forced distributed: a
+    driver-built result has no plan to grow."""
     from neuroner_spark.operators.graph_rank import pagerank
 
     edges = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long")
@@ -261,7 +266,9 @@ def test_pagerank_plan_grows_linearly(spark):
 
     assert plan_len(6) < 3 * plan_len(3)
 
-def test_pagerank_undirected_symmetry(spark):
+
+@both_paths
+def test_pagerank_undirected_symmetry(spark, force_distributed):
     """On an undirected path a-b-c the endpoints tie and the middle
     dominates; early tol exit stops the loop."""
     from neuroner_spark.operators.graph_rank import pagerank
@@ -279,6 +286,44 @@ def test_pagerank_undirected_symmetry(spark):
     assert abs(got[1] - got[3]) < 1e-9
     assert got[2] > got[1]
     assert len(log) < 50  # tol exit fired
+
+
+@pytest.mark.parametrize("tol", [0.0, 1e-6])
+def test_pagerank_driver_path_matches_loop(spark, request, tol):
+    """A random 40-node graph with self-loops, duplicate edges and
+    dangling nodes: the driver path and the forced loop agree within
+    1e-12, run the same rounds, and only driver entries carry
+    ``mode='driver'``.  A self-loop-only graph ranks no node on either."""
+    import numpy as np
+
+    from neuroner_spark.operators.graph_rank import pagerank
+
+    rng = np.random.default_rng(7)
+    pairs = rng.integers(0, 40, size=(120, 2))
+    pairs = pairs[pairs[:, 0] < 30]  # sources 30..39 only receive: dangling
+    rows = [(int(s), int(d)) for s, d in pairs]
+    rows += rows[:10] + [(3, 3), (41, 41)]  # duplicates; self-loops, one self-only
+    edges = spark.createDataFrame(rows, "src long, dst long")
+
+    self_only = spark.createDataFrame([(5, 5)], "src long, dst long")
+
+    def run():
+        log: list = []
+        out = pagerank(edges, max_iter=25, tol=tol, iteration_log=log)
+        empty = pagerank(self_only, max_iter=2, tol=tol).count()
+        return {r["node"]: r["rank"] for r in out.collect()}, log, empty
+
+    drv, drv_log, drv_empty = run()
+    request.getfixturevalue("force_distributed")
+    with pin_scope():
+        dist, dist_log, dist_empty = run()
+    assert drv_empty == dist_empty == 0
+    assert drv.keys() == dist.keys() and 41 not in drv
+    assert max(abs(drv[k] - dist[k]) for k in drv) < 1e-12
+    assert len(drv_log) == len(dist_log)
+    assert len(drv_log) < 25 if tol else len(drv_log) == 25
+    assert all(x["mode"] == "driver" for x in drv_log)
+    assert all("mode" not in x for x in dist_log)
 
 
 def test_entity_pagerank_over_store(spark, tmp_path):
@@ -407,7 +452,8 @@ def test_link_edges_extraction_and_resolution(spark):
     assert hg == {("me.example", "other.example"): 1}
 
 
-def test_host_pagerank_hub_and_fixture_plumbing(spark):
+@both_paths
+def test_host_pagerank_hub_and_fixture_plumbing(spark, force_distributed):
     """host_pagerank: (a) a manual hub graph ranks the link sink first;
     (b) the linked-pages fixture runs end-to-end with ranks summing to
     1 over the host graph's nodes."""

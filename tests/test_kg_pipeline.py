@@ -52,17 +52,15 @@ def test_resume_skips_stages(spark, pipeline_out):
     assert t1 == t2
 
 
-def test_canonical_map_distributed_fallback_parity(spark):
-    """small_threshold=0 forces the distributed connected-components
-    branch; its mapping must equal the driver union-find path's."""
+def test_canonical_map_distributed_fallback_parity(spark, request):
+    """Forcing the distributed connected-components branch: its mapping
+    must equal the driver union-find path's."""
     from neuroner_spark.plans.kg_pipeline import canonical_map
 
     aliases = alias_df(spark)
     small = {(r["entity_id"], r["canonical_id"]) for r in canonical_map(aliases).collect()}
-    dist = {
-        (r["entity_id"], r["canonical_id"])
-        for r in canonical_map(aliases, small_threshold=0).collect()
-    }
+    request.getfixturevalue("force_distributed")
+    dist = {(r["entity_id"], r["canonical_id"]) for r in canonical_map(aliases).collect()}
     assert small == dist and len(small) > 0
 
 

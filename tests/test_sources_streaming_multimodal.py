@@ -574,6 +574,7 @@ def test_streaming_pipeline_verb_predicates(spark, tmp_path):
     assert {"same_sentence_as", "co_occurs_with"} <= preds
 
 
+@pytest.mark.usefixtures("no_leaked_pins")
 def test_streaming_uses_issued_canonical_store(spark, tmp_path):
     """canonical_store_dir= snapshots the issued-id mapping at stream
     start: after a batch-side merge of entities 5 and 6, streaming
