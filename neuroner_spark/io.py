@@ -144,8 +144,10 @@ def pin_scope():
 
 
 # The most rows a driver-side operator path takes from one frame: the
-# inputs of connected_components, canonical_map and pagerank at or
-# under it are solved on the driver, larger ones run distributed.
+# inputs of connected_components, canonical_map, pagerank,
+# merge_canonical_snapshots (prior and edges) and incremental_near_dedup
+# (the batch's band rows) at or under it are solved on the driver,
+# larger ones run distributed.
 DRIVER_ROWS_LIMIT = 100_000
 
 

@@ -214,21 +214,35 @@ def merge_canonical_snapshots(prior: DataFrame, edges: DataFrame) -> dict:
     is the reconciliation record for the cases where an issued id does
     retire.
 
-    Scale shape at 10^9 entities: the new edges' endpoints are first
-    REWRITTEN through the issued mapping (two equi-joins against the
-    keyed store), so connected components runs over a graph
-    proportional to the NEW EVIDENCE only — never the store.  The
-    store-sized work is exactly one left equi-join (relabel prior
-    through the delta) plus one anti-join (admit new entities); both
-    key on the mapping's own layout, so with the store bucketed by
-    entity_id/canonical_id neither shuffles the store.  ``superseded``
-    falls out of the delta (tiny) for free.
+    Scale shape: the input size picks one of two paths, with no
+    parameter.
+      - ``prior`` and ``edges`` each at most ``io.DRIVER_ROWS_LIMIT``
+        rows (``io.collect_small``, one bounded job each): the same
+        steps run on the driver with a dict and
+        ``min_root_components``, and both outputs come back as
+        ``local_df`` — an issued mapping and a snapshot's same-as
+        evidence are dictionary-sized, and at that size the
+        distributed joins cost scheduler latency, not work (a 500-page
+        snapshot's merge and store writes: 28 Spark jobs -> 14).
+      - Above it, at up to 10^9 entities: the new edges' endpoints are
+        first REWRITTEN through the issued mapping (two equi-joins
+        against the keyed store), so connected components runs over a
+        graph proportional to the NEW EVIDENCE only — never the store.
+        The store-sized work is exactly one left equi-join (relabel
+        prior through the delta) plus one anti-join (admit new
+        entities); both key on the mapping's own layout, so with the
+        store bucketed by entity_id/canonical_id neither shuffles the
+        store.  ``superseded`` falls out of the delta (tiny) for free.
     """
     p = prior.select(
         F.col("entity_id").cast("long").alias("entity_id"),
         F.col("canonical_id").cast("long").alias("canonical_id"),
     )
     e = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
+    small_prior = collect_small(p)
+    small_edges = collect_small(e) if small_prior is not None else None
+    if small_edges is not None:
+        return _merge_driver(p.sparkSession, small_prior, small_edges)
     # endpoint rewrite: an edge touching an issued component enters CC
     # as that component's canonical id; unknown (new) ids pass through
     for side in ("src", "dst"):
@@ -264,3 +278,30 @@ def merge_canonical_snapshots(prior: DataFrame, edges: DataFrame) -> dict:
         F.col("_issued") & (F.col("node") != F.col("_label"))
     ).select(F.col("node").alias("old_canonical_id"), F.col("_label").alias("canonical_id"))
     return {"mapping": mapping, "superseded": superseded}
+
+
+def _merge_driver(spark, prior, edges) -> dict:
+    """``merge_canonical_snapshots``' driver path over pandas ``prior``
+    (entity_id, canonical_id) and ``edges`` (src, dst): the same
+    endpoint rewrite, oldest-issued-id label, mapping and superseded
+    rules, with a dict for each join."""
+    entities = prior["entity_id"].tolist()
+    canonicals = prior["canonical_id"].tolist()
+    canon = dict(zip(entities, canonicals))
+    comp = min_root_components(
+        (canon.get(s, s), canon.get(d, d))
+        for s, d in zip(edges["src"].tolist(), edges["dst"].tolist())
+    )
+    issued = set(canonicals)
+    prior_min: dict[int, int] = {}
+    for node, root in comp.items():
+        if node in issued:
+            prior_min[root] = min(node, prior_min.get(root, node))
+    label = {node: prior_min.get(root, root) for node, root in comp.items()}
+    mapping = [(ent, label.get(c, c)) for ent, c in zip(entities, canonicals)]
+    mapping += [(node, lab) for node, lab in label.items() if node not in canon]
+    superseded = [(node, lab) for node, lab in label.items() if node in issued and node != lab]
+    return {
+        "mapping": local_df(spark, mapping, "entity_id long, canonical_id long"),
+        "superseded": local_df(spark, superseded, "old_canonical_id long, canonical_id long"),
+    }

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from neuroner_spark.functions.text_analysis import fingerprint, hash28, hash64, ws_tokens
-from neuroner_spark.io import pin
+from neuroner_spark.io import collect_small, local_df, pin, release
 
 # Prime 2^31-1 for the universal-hash family (a*x+b) mod p over 28-bit
 # inputs: a < 2^31, x < 2^28 keeps a*x < 2^59 — no int64 overflow under
@@ -409,9 +409,26 @@ def incremental_near_dedup(
     them too.  Doc ids must be globally unique across snapshots (url
     hash at web scale).
 
-    Scale: one scan of the new batch (banded, localCheckpointed), one
-    equi-join against the compact band index (shuffle on band_hash,
-    never on text), components only over the new batch's survivors.
+    Scale: one scan of the new batch (banded, localCheckpointed); the
+    input size then picks one of two paths, with no parameter.
+      - At most ``io.DRIVER_ROWS_LIMIT`` band rows in the batch
+        (``io.collect_small``): the store is read once, in one bounded
+        job — a semi-join against the batch's distinct band keys
+        (broadcast ``local_df``) aggregated to min(doc_id) per key, at
+        most one row per key — and the rest runs on the driver: hits in
+        pandas, and each survivor bucket's members unioned with the
+        bucket minimum (``components.min_root_components``; the same
+        connectivity as capped pairs plus giant star edges, so
+        ``max_bucket`` cannot change the answer).  One
+        ``iteration_log`` entry with ``mode='driver'``.  A crawl
+        snapshot's gate is dictionary-sized work, and at that size
+        Spark jobs cost scheduler latency, not work (a 500-page
+        snapshot's gate and store writes: 37 Spark jobs -> 15).
+      - Above it: one equi-join against the compact band index
+        (shuffle on band_hash, never on text), pinned once
+        (``local_checkpoint``) because it feeds both the survivor
+        anti-joins and the output union; components only over the
+        new batch's survivors.
     The corpus scan is avoided entirely — at 10^12 ingested docs the
     band index is the only corpus-sized input, and it arrives
     pre-aggregated (or maintained incrementally as a keyed table).
@@ -420,22 +437,36 @@ def incremental_near_dedup(
     already materialized it (the snapshot store appends the same
     frame — one scan, not two); it must be the ``minhash_banded``
     output for exactly ``new_docs`` under the same (n, bands,
-    fast_hash).
+    fast_hash).  Otherwise this function pins its own banded frame,
+    and releases it on the driver path (the answer no longer reads it).
     """
+    import time
+
     banded_new = (
         new_banded
         if new_banded is not None
         else pin(minhash_banded(new_docs, n, bands, id_col, text_col, fast_hash), "local_checkpoint")
     )
-    band_index = corpus_banded.groupBy("band_id", "band_hash").agg(
-        F.min("doc_id").alias("first_doc")
-    )
-    hits = (
-        banded_new.join(band_index, ["band_id", "band_hash"])
-        .groupBy("doc_id")
-        .agg(F.min("first_doc").alias("dup_of"))
-    )
+    keys = ["band_id", "band_hash"]
     all_new = new_docs.select(F.col(id_col).cast("long").alias("doc_id")).distinct()
+    t0 = time.time()
+    small = collect_small(banded_new.select("doc_id", *keys))
+    if small is not None:
+        key_schema = banded_new.select(*keys).schema
+        if new_banded is None:
+            release(banded_new)
+        return _incremental_dedup_driver(
+            small, key_schema, corpus_banded, all_new, iteration_log, t0
+        )
+    band_index = corpus_banded.groupBy(*keys).agg(F.min("doc_id").alias("first_doc"))
+    # read by the survivor anti-joins AND the output union: pinned, so
+    # the corpus-sized index is aggregated once, not once per consumer
+    hits = pin(
+        banded_new.join(band_index, keys)
+        .groupBy("doc_id")
+        .agg(F.min("first_doc").alias("dup_of")),
+        "local_checkpoint",
+    )
     surviving_banded = banded_new.join(hits.select("doc_id"), "doc_id", "left_anti")
     surv_docs = all_new.join(hits.select("doc_id"), "doc_id", "left_anti")
     within = near_dedup_from_banded(
@@ -453,6 +484,41 @@ def incremental_near_dedup(
             .otherwise(F.col("component"))
             .alias("dup_of"),
         )
+    )
+
+
+def _incremental_dedup_driver(
+    banded, key_schema, corpus_banded: DataFrame, all_new: DataFrame, iteration_log, t0: float
+) -> DataFrame:
+    """``incremental_near_dedup``'s driver path over the batch's band
+    rows ``banded`` (pandas: doc_id, band_id, band_hash)."""
+    import time
+
+    from neuroner_spark.operators.components import min_root_components
+
+    spark = all_new.sparkSession
+    keys = ["band_id", "band_hash"]
+    probe = local_df(spark, banded[keys].drop_duplicates(), key_schema)
+    index = (
+        corpus_banded.join(F.broadcast(probe), keys, "left_semi")
+        .groupBy(*keys)
+        .agg(F.min("doc_id").alias("first_doc"))
+        .toPandas()
+    )
+    hits = banded.merge(index, on=keys).groupby("doc_id")["first_doc"].min()
+    surv = banded[~banded["doc_id"].isin(hits.index)]
+    bucket_min = surv.groupby(keys)["doc_id"].transform("min")
+    comp = min_root_components(zip(bucket_min.tolist(), surv["doc_id"].tolist()))
+    dups = [(d, "dup_of_corpus", f) for d, f in zip(hits.index.tolist(), hits.tolist())]
+    dups += [(d, "dup_of_batch", c) for d, c in comp.items() if c != d]
+    if iteration_log is not None:
+        iteration_log.append(
+            {"iter": 0, "edges": len(surv), "wall_sec": round(time.time() - t0, 3), "mode": "driver"}
+        )
+    # every doc not flagged (unique, or too short to band) is kept
+    flagged = local_df(spark, dups, "doc_id long, status string, dup_of long")
+    return all_new.join(F.broadcast(flagged), "doc_id", "left").select(
+        "doc_id", F.coalesce("status", F.lit("kept")).alias("status"), "dup_of"
     )
 
 

@@ -574,7 +574,12 @@ def run_incremental_snapshot(
     Scale: one banded scan of the snapshot, one equi-join against the
     band index (latest ``compact_band_store`` table + the raw
     snapshot partitions after it), components over the snapshot's
-    survivors only.  New snapshots never rescan old text."""
+    survivors only.  New snapshots never rescan old text.  The gate
+    picks its path by size (``incremental_near_dedup``): a snapshot
+    with at most ``io.DRIVER_ROWS_LIMIT`` band rows reads only the
+    index rows its band keys hit, in one bounded job, and solves the
+    rest on the driver; a larger one runs the distributed join and
+    components."""
     from neuroner_spark.operators.dedup import incremental_near_dedup, minhash_banded
 
     bands_root = os.path.join(store_dir, "bands")

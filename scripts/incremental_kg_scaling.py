@@ -10,6 +10,13 @@ snapshot-1 ingest: 50% re-crawled pages (band-index drops) + 50% new
 pages (full pipeline), with same-as evidence merging two issued ids.
 Pure-python load probes bracket each timed ingest.
 
+Each leg also records which path the dedup gate and the canonical
+merge took: both solve inputs of at most ``io.DRIVER_ROWS_LIMIT`` rows
+on the driver (the snapshot's band rows; the prior mapping and the
+same-as edges), so the recorded ``probe_rows`` and ``paths`` say which
+shape a wall measures.  At the 150k-page default the gate runs
+distributed (4 band rows a page) and the merge on the driver.
+
 Writes BENCH/incremental_kg_scaling.json.
 Usage: python scripts/incremental_kg_scaling.py [n_pages] [N] [rounds]
 """
@@ -86,10 +93,28 @@ n_trip = r["triples"].count()
 dec = {{x["status"]: 1 for x in r["decisions"].select("status").distinct().collect()}}
 wall = round(time.time() - t0, 3)
 stage_walls = {{m["stage"]: m["wall_s"] for m in r["lineage"]}}
+probe_sec = [pr0, probe()]
+
+# untimed: the input sizes each operator's driver/distributed choice saw
+from neuroner_spark.io import DRIVER_ROWS_LIMIT
+from neuroner_spark.operators.dedup import minhash_banded
+from neuroner_spark.plans.kg_pipeline import sameas_edges_from_aliases
+rows = {{
+    "banded": minhash_banded(p1.select(F.xxhash64("url").alias("doc_id"), "text"),
+                             fast_hash=True).count(),
+    "prior": spark.read.parquet(store + "/canonical/mapping/snapshot=0").count(),
+    # alias-share edges + one identity edge per entity + the caller's edge
+    "edges": sameas_edges_from_aliases(aliases).count()
+             + aliases.select("entity_id").distinct().count() + 1,
+}}
+path = lambda *n: "driver" if max(n) <= DRIVER_ROWS_LIMIT else "distributed"
 print(json.dumps({{"wall_s": wall, "n_triples": n_trip, "n_pages_actual": n_pages,
-                   "statuses": sorted(dec), "probe_sec": [pr0, probe()],
+                   "statuses": sorted(dec), "probe_sec": probe_sec,
                    "step_walls": r["step_walls"],
-                   "pipeline_stage_walls": stage_walls}}))
+                   "pipeline_stage_walls": stage_walls,
+                   "probe_rows": rows,
+                   "paths": {{"dedup_gate": path(rows["banded"]),
+                              "canonical_merge": path(rows["prior"], rows["edges"])}}}}))
 """
 
 
@@ -106,7 +131,7 @@ def run_leg(cpus: int, n_pages: int) -> dict:
 
 
 def main() -> None:
-    n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000
+    n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 150_000
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 2
     legs = {n: [], 4 * n: []}
@@ -122,6 +147,8 @@ def main() -> None:
         "job": "run_incremental_kg snapshot-1 ingest (50% re-crawl, 50% new)",
         "n_pages": n_pages,
         "legs": {f"local[{c}]": v for c, v in legs.items()},
+        # a function of the input size only, so the same in every run
+        "paths": {f"local[{c}]": v[0]["paths"] for c, v in legs.items()},
         "median_wall_s": {f"local[{c}]": m for c, m in med.items()},
         "pages_per_sec": {f"local[{c}]": round(n_pages / m, 1) for c, m in med.items()},
         "efficiency_N_to_4N": eff,

@@ -2,6 +2,7 @@
 
 import pytest
 
+from neuroner_spark import io
 from neuroner_spark.fixtures.gen import sameas_df
 from neuroner_spark.io import pin_scope
 from neuroner_spark.operators.components import connected_components
@@ -80,17 +81,27 @@ def test_cc_driver_fast_path_matches_star_loop(spark, request):
 
 
 def _merge(spark, prior_rows, edge_rows):
+    """(mapping dict, superseded set) of ``merge_canonical_snapshots``
+    on its driver path, then with the distributed path forced (its pins
+    released by a scope); the two must agree."""
     from neuroner_spark.operators.components import merge_canonical_snapshots
 
-    prior = spark.createDataFrame(
-        prior_rows or [], "entity_id long, canonical_id long"
-    )
-    edges = spark.createDataFrame(edge_rows or [], "src long, dst long")
-    out = merge_canonical_snapshots(prior, edges)
-    return (
-        {r["entity_id"]: r["canonical_id"] for r in out["mapping"].collect()},
-        {(r["old_canonical_id"], r["canonical_id"]) for r in out["superseded"].collect()},
-    )
+    def run():
+        prior = spark.createDataFrame(
+            prior_rows or [], "entity_id long, canonical_id long"
+        )
+        edges = spark.createDataFrame(edge_rows or [], "src long, dst long")
+        out = merge_canonical_snapshots(prior, edges)
+        return (
+            {r["entity_id"]: r["canonical_id"] for r in out["mapping"].collect()},
+            {(r["old_canonical_id"], r["canonical_id"]) for r in out["superseded"].collect()},
+        )
+
+    driver = run()
+    with pytest.MonkeyPatch.context() as mp, pin_scope():
+        mp.setattr(io, "DRIVER_ROWS_LIMIT", 0)
+        assert run() == driver
+    return driver
 
 
 def test_merge_canonical_fresh_issue(spark):
@@ -153,10 +164,9 @@ def test_merge_canonical_matches_model_on_random_batches(spark):
     merge_canonical_snapshots matches an independent Python model of
     the issued-id semantics — components = plain union-find over all
     edges so far; label = min issued id in the component (ids become
-    issued the first time a mapping is emitted), else min member."""
+    issued the first time a mapping is emitted), else min member —
+    on both paths."""
     import numpy as np
-
-    from neuroner_spark.operators.components import merge_canonical_snapshots
 
     rng = np.random.default_rng(7)
     prior_rows: list[tuple[int, int]] = []
@@ -195,13 +205,7 @@ def test_merge_canonical_matches_model_on_random_batches(spark):
         # keep previously-issued labels for nodes untouched this batch
         # (the model above recomputes from ALL edges, which must agree
         # because min-issued is monotone under edge addition)
-        out = merge_canonical_snapshots(
-            spark.createDataFrame(
-                prior_rows or [], "entity_id long, canonical_id long"
-            ),
-            spark.createDataFrame(edges, "src long, dst long"),
-        )
-        got = {r["entity_id"]: r["canonical_id"] for r in out["mapping"].collect()}
+        got, _ = _merge(spark, prior_rows, edges)
         assert got == model, (batch, got, model)
         # only canonical VALUES are issued labels (a newcomer key that
         # lost to an older issued id — e.g. 22 -> 23 — must never later

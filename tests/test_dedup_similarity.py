@@ -2,7 +2,10 @@
 pair generators must FIND planted near-duplicates and must not go
 quadratic (candidates only from key collisions)."""
 
+import re
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 BASE = (
@@ -836,12 +839,37 @@ def test_ivfpq_knn_join_matches_exact_join(spark):
         assert len(by_q[q] & exact_by_q[q]) >= 2, (q, by_q[q], exact_by_q[q])
 
 
-def test_incremental_near_dedup_against_signature_store(spark):
+def _gate_on_both_paths(batch, store, **kw):
+    """(decisions by doc_id, driver log, distributed log):
+    ``incremental_near_dedup`` on its driver path, then with the
+    distributed path forced (its pins released by a scope).  The two
+    must agree row for row, with one row per doc."""
+    from neuroner_spark import io
+    from neuroner_spark.operators.dedup import incremental_near_dedup
+
+    def run(log):
+        rows = incremental_near_dedup(batch, store, iteration_log=log, **kw).collect()
+        return sorted(rows, key=lambda r: (r["doc_id"], r["status"]))
+
+    log_driver, log_dist = [], []
+    driver = run(log_driver)
+    with pytest.MonkeyPatch.context() as mp, io.pin_scope():
+        mp.setattr(io, "DRIVER_ROWS_LIMIT", 0)
+        dist = run(log_dist)
+    assert driver == dist
+    out = {r["doc_id"]: r for r in driver}
+    assert len(out) == len(driver)
+    return out, log_driver, log_dist
+
+
+def test_incremental_near_dedup_against_signature_store(spark, no_leaked_pins):
     """New snapshot dedups against the corpus via its banded signature
     table only: corpus near-dups flagged with their corpus rep,
     within-batch dups clustered, unique docs kept — and appending the
-    kept docs' bands makes the NEXT snapshot see them as corpus."""
-    from neuroner_spark.operators.dedup import incremental_near_dedup, minhash_banded
+    kept docs' bands makes the NEXT snapshot see them as corpus.  Both
+    paths agree, and the driver path releases the banded frame it
+    pinned."""
+    from neuroner_spark.operators.dedup import minhash_banded
 
     corpus = spark.createDataFrame(
         [(0, BASE), (4, "completely different text about spark streaming windows and state")],
@@ -859,7 +887,7 @@ def test_incremental_near_dedup_against_signature_store(spark):
         ],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r for r in incremental_near_dedup(batch, store).collect()}
+    out, _, _ = _gate_on_both_paths(batch, store)
     assert len(out) == 5  # one row per new doc, nothing dropped
     assert out[10]["status"] == "dup_of_corpus" and out[10]["dup_of"] == 0
     assert out[11]["status"] == "dup_of_corpus" and out[11]["dup_of"] == 0
@@ -874,9 +902,9 @@ def test_incremental_near_dedup_against_signature_store(spark):
         minhash_banded(batch.filter(F.col("doc_id").isin(kept_ids)))
     )
     nxt = spark.createDataFrame([(20, fresh)], "doc_id long, text string")
-    out2 = incremental_near_dedup(nxt, store2).collect()
+    out2, _, _ = _gate_on_both_paths(nxt, store2)
     assert len(out2) == 1
-    assert out2[0]["status"] == "dup_of_corpus" and out2[0]["dup_of"] == 12
+    assert out2[20]["status"] == "dup_of_corpus" and out2[20]["dup_of"] == 12
 
 
 def test_ivfpq_codes_partitioned_by_cell_prune(spark, tmp_path):
@@ -901,17 +929,87 @@ def test_ivfpq_codes_partitioned_by_cell_prune(spark, tmp_path):
     assert len(rows) == 5 and [r["rank"] for r in sorted(rows, key=lambda r: r["rank"])] == [1, 2, 3, 4, 5]
 
 
-def test_incremental_near_dedup_short_docs_kept(spark):
+def test_incremental_near_dedup_short_docs_kept(spark, no_leaked_pins):
     """Docs too short to produce any 3-gram shingle must come back
-    kept (no silent drop) — in both the corpus-hit and batch paths."""
-    from neuroner_spark.operators.dedup import incremental_near_dedup, minhash_banded
+    kept (no silent drop) — in both the corpus-hit and batch paths, on
+    the driver and the distributed path."""
+    from neuroner_spark.operators.dedup import minhash_banded
 
     corpus = spark.createDataFrame([(0, BASE)], "doc_id long, text string")
     batch = spark.createDataFrame(
         [(10, "tiny"), (11, ""), (12, BASE)],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r for r in incremental_near_dedup(batch, minhash_banded(corpus)).collect()}
+    out, _, _ = _gate_on_both_paths(batch, minhash_banded(corpus))
     assert len(out) == 3
     assert out[10]["status"] == "kept" and out[11]["status"] == "kept"
     assert out[12]["status"] == "dup_of_corpus" and out[12]["dup_of"] == 0
+
+
+@pytest.mark.parametrize("max_bucket", [1000, 2, None])
+def test_incremental_near_dedup_driver_path_matches_loop(spark, max_bucket):
+    """A random snapshot — corpus replicas, near-replicas, a four-copy
+    batch cluster (over ``max_bucket=2``), uniques and short docs — gets
+    the same decisions, row for row, on the driver path and on the
+    distributed join + components loop; the driver path logs one
+    ``mode='driver'`` entry."""
+    from neuroner_spark.operators.dedup import minhash_banded
+
+    rng = np.random.default_rng(11)
+    vocab = [f"w{i}" for i in range(60)]
+
+    def text(k):
+        return " ".join(rng.choice(vocab, size=k))
+
+    corpus_texts = [text(int(rng.integers(12, 30))) for _ in range(20)]
+    corpus = spark.createDataFrame(list(enumerate(corpus_texts)), "doc_id long, text string")
+    batch_texts = [corpus_texts[i] for i in (3, 3, 7)]  # corpus replicas
+    batch_texts += [corpus_texts[9] + " tail"]  # near-replica of a corpus doc
+    cluster = text(20)
+    batch_texts += [cluster] * 4 + [cluster + " x"]  # batch replicas
+    batch_texts += [text(int(rng.integers(12, 30))) for _ in range(8)]  # uniques
+    batch_texts += ["tiny", "", "two words"]  # too short to shingle
+    ids = rng.permutation(np.arange(100, 100 + len(batch_texts))).tolist()
+    batch = spark.createDataFrame(list(zip(ids, batch_texts)), "doc_id long, text string")
+
+    out, log_driver, log_dist = _gate_on_both_paths(
+        batch, minhash_banded(corpus), max_bucket=max_bucket
+    )
+    statuses = {r["status"] for r in out.values()}
+    assert len(out) == len(batch_texts) and statuses == {"kept", "dup_of_corpus", "dup_of_batch"}
+    assert len(log_driver) == 1 and log_driver[0]["mode"] == "driver"
+    assert all("mode" not in e for e in log_dist)
+
+
+def test_incremental_near_dedup_reads_band_store_once(spark, tmp_path, force_distributed):
+    """Distributed gate: the band index feeds the survivor anti-joins
+    and the output union.  It is pinned once, so a gate plus its
+    decisions write scans the parquet band store once, not once per
+    consumer (three times)."""
+    from neuroner_spark.io import pin_scope
+    from neuroner_spark.operators.dedup import incremental_near_dedup, minhash_banded
+
+    store = str(tmp_path / "bands")
+    minhash_banded(_docs(spark)).write.parquet(store)
+    batch = spark.createDataFrame(
+        [(10, BASE), (11, BASE.replace("lazy", "sleepy")), (12, "fresh page text about nothing seen")],
+        "doc_id long, text string",
+    )
+    sql = spark._jsparkSession.sharedState().statusStore()
+    execs = sql.executionsList()
+    seen = {execs.apply(i).executionId() for i in range(execs.size())}
+    with pin_scope():
+        incremental_near_dedup(batch, spark.read.parquet(store)).write.parquet(
+            str(tmp_path / "decisions")
+        )
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    scans = 0
+    execs = sql.executionsList()
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.executionId() in seen:
+            continue
+        plan = e.physicalPlanDescription()
+        final = plan.split("== Final Plan ==", 1)[-1].split("== Initial Plan ==", 1)[0]
+        scans += len(re.findall(r"Scan parquet\s*\(\d+\)", final))
+    assert scans == 1
